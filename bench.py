@@ -11,6 +11,11 @@ line outgrew it and the driver recorded parsed:null):
    "scaling": {"cores_lo": 2, "cores_hi": 8, "throughput_lo": ..,
                "throughput_hi": .., "efficiency": .., "quiet": bool}}
 
+Every timed query row stays in the line. If it would pass 1990 chars, the
+scaling block is left out (``"scaling_see_detail": true``; it is in
+bench_detail.json) and the line is printed compactly with query seconds at
+2 decimals (1 if that is still too long).
+
 Full evidence (all samples, per-sample and per-query /proc/stat steal, the
 sampling policy prose) goes to bench_detail.json next to this file AND to an
 earlier "BENCH_DETAIL {...}" stdout line.
@@ -260,6 +265,31 @@ HEADLINE_QUERIES = [
     "ir3_bm25f_anchor_topk",
     "dm5_weighted_sample",
 ]
+
+
+# the harness reading this output keeps the last 2000 chars of stdout,
+# the final newline included
+HEADLINE_MAX = 1990
+
+
+def headline_line(result: dict) -> str:
+    """The final stdout line: ``result`` as JSON, fitted to the 2000-char
+    tail capture of the harness reading it without dropping a timed query
+    row (popping the fastest rows once hid a timed row's regression). Over
+    ``HEADLINE_MAX`` chars, the scaling block goes first (bench_detail.json
+    keeps it), then the line is printed compactly with query seconds at 2
+    decimals, then at 1."""
+    line = json.dumps(result)
+    if len(line) > HEADLINE_MAX and "scaling" in result:
+        result = {k: v for k, v in result.items() if k != "scaling"}
+        result["scaling_see_detail"] = True
+        line = json.dumps(result)
+    for digits in (2, 1):
+        if len(line) <= HEADLINE_MAX:
+            break
+        queries = {k: round(v, digits) for k, v in result["queries"].items()}
+        line = json.dumps({**result, "queries": queries}, separators=(",", ":"))
+    return line
 
 
 def read_steal() -> int:
@@ -560,6 +590,7 @@ def main():
                 or detail["scaling_kept_contended_hi"]
             )
             result["scaling"] = scaling
+            detail["scaling"] = scaling
 
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -567,23 +598,7 @@ def main():
         ) as fh:
             json.dump(detail, fh, indent=1)
         print("BENCH_DETAIL " + json.dumps(detail))
-        headline = json.dumps(result)
-        # hard guard: the driver's tail capture is 2000 chars; never let the
-        # headline outgrow it again. Drop per-query rows before core keys —
-        # FASTEST rows first (sub-second rows carry the least information;
-        # the slow rows are what a reader compares), and NEVER the linkage
-        # headline (the r6 driver line silently lost linkage_pipeline
-        # because this loop popped insertion order, i.e. linkage first)
-        while len(headline) > 1800 and len(result["queries"]) > 1:
-            droppable = [
-                k for k in result["queries"] if k != "linkage_pipeline"
-            ]
-            result["queries"].pop(
-                min(droppable, key=lambda k: result["queries"][k])
-            )
-            result["queries_truncated_see_detail"] = True
-            headline = json.dumps(result)
-        print(headline)
+        print(headline_line(result))
     finally:
         shutil.rmtree(data_dir, ignore_errors=True)
 

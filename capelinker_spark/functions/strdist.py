@@ -4,9 +4,12 @@ The reference computes these with the C-backed ``stringdist`` R package
 (``/root/reference/R/distances.R:27-43``, ``R/candidates.R:65-73``). Here the
 pure-Python kernels (``jaro_winkler_dist``, ``osa_dist``) define the exact
 semantics (unit-tested against stringdist's documented behaviour), and the
-Spark-facing surface is Arrow-vectorized pandas UDFs — zero per-row Python
-UDFs, per the engine's north rule. Soundex distance and the Gaussian kernel
-are pure native column expressions (JVM-side, whole-stage codegen).
+Spark-facing surface is Arrow-vectorized UDFs — zero per-row Python UDFs,
+per the engine's north rule. The JW/OSA UDFs are ``arrow_udf``s that hand
+each batch's Arrow string buffers to the C kernels (``_native``); Smith-
+Waterman stays a pandas UDF over the Python kernel. Soundex distance and
+the Gaussian kernel are pure native column expressions (JVM-side, whole-
+stage codegen).
 
 Semantics locked to the reference:
 
@@ -27,10 +30,13 @@ Semantics locked to the reference:
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import DoubleType
+
+from capelinker_spark.functions import _native
 
 # ---------------------------------------------------------------------------
 # pure-Python kernels (semantics source of truth; also used by the oracle-side
@@ -253,77 +259,55 @@ def gk_py(x1: float, x2: float, sigma: float = 1.0) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-vectorized pandas UDFs (the only Python that runs on executors)
+# Arrow-vectorized UDFs (the only Python that runs on executors)
 # ---------------------------------------------------------------------------
 
 
 _CACHE_MAX = 1 << 20
 
 
-def _pairwise_unique(
-    a: pd.Series, b: pd.Series, fn, cache: dict | None = None, batch_fn=None
-):
+def _pairwise_unique(a: pd.Series, b: pd.Series, fn, cache: dict):
     """Apply fn over the UNIQUE (a, b) pairs of the batch, then broadcast back.
 
     Candidate-pair batches repeat the same name pairs heavily (frequent
     surnames); the reference itself dedups before the expensive op
     (``R/util.R:146-148``). This is the per-batch analog, plus a worker-
     lifetime cache shared ACROSS batches (Python UDF workers are long-lived,
-    so frequent-surname pairs are computed once per executor).
-
-    ``batch_fn(list_s, list_t) -> ndarray | None``: optional C fast path for
-    the uncached str/str pairs (one ctypes call per batch — bit-identical to
-    ``fn`` by contract, see _strdistc.c). Non-string inputs (None/NaN) always
-    go through ``fn`` for its NULL semantics; ``batch_fn`` returning None
-    falls back to ``fn`` entirely."""
-    if cache is None:
-        cache = {}
+    so frequent-surname pairs are computed once per executor). Only the
+    pure-Python kernels go through here: for the C kernels the dict
+    bookkeeping cost more per pair than scoring every pair."""
     va = a.tolist()  # object series → str/None, no pandas machinery in the loop
     vb = b.tolist()
-    uniq = dict.fromkeys(zip(va, vb))
-    todo = [k for k in uniq if k not in cache]
+    todo = [k for k in dict.fromkeys(zip(va, vb)) if k not in cache]
     if todo:
         if len(cache) > _CACHE_MAX:
             cache.clear()
-        vals = None
-        clean = None
-        if batch_fn is not None:
-            clean = [
-                k for k in todo if type(k[0]) is str and type(k[1]) is str
-            ]
-            if clean:
-                vals = batch_fn([k[0] for k in clean], [k[1] for k in clean])
-        if vals is not None:
-            for k, v in zip(clean, vals.tolist()):
-                cache[k] = v
-            for k in todo:
-                if not (type(k[0]) is str and type(k[1]) is str):
-                    cache[k] = fn(k[0], k[1])
-        else:
-            for k in todo:
-                cache[k] = fn(k[0], k[1])
+        for k in todo:
+            cache[k] = fn(k[0], k[1])
     out = [cache[k] for k in zip(va, vb)]
     return pd.Series(out, index=a.index, dtype="float64")
 
 
+def _python_batch(a: pa.Array, b: pa.Array, fn) -> pa.Array:
+    """``fn`` pair by pair: the fallback when the C kernels are unavailable."""
+    return pa.array(
+        [fn(x, y) for x, y in zip(a.to_pylist(), b.to_pylist())], pa.float64()
+    )
+
+
 def make_jw_udf(p: float = 0.1):
-    """Factory: pandas UDF computing Jaro-Winkler distance with prefix scale p.
+    """Factory: Arrow UDF computing Jaro-Winkler distance with prefix scale p.
 
-    Fast path: the C batch kernel (functions/_native.py), bit-identical to
-    the pure-Python semantics oracle; falls back to Python transparently."""
-    from capelinker_spark.functions import _native
+    Each batch is one call of the C kernel (functions/_native.py) on the
+    Arrow string buffers, bit-identical to the pure-Python semantics
+    oracle; falls back to Python transparently."""
 
-    cache: dict = {}
-
-    @pandas_udf(DoubleType())
-    def jw(a: pd.Series, b: pd.Series) -> pd.Series:
-        return _pairwise_unique(
-            a,
-            b,
-            lambda x, y: jaro_winkler_dist(x, y, p=p),
-            cache,
-            batch_fn=lambda ss, ts: _native.jw_batch(ss, ts, p),
-        )
+    @arrow_udf(DoubleType())
+    def jw(a: pa.Array, b: pa.Array) -> pa.Array:
+        out = _native.jw_batch(a, b, p)
+        if out is not None:
+            return out
+        return _python_batch(a, b, lambda x, y: jaro_winkler_dist(x, y, p=p))
 
     return jw
 
@@ -331,30 +315,19 @@ def make_jw_udf(p: float = 0.1):
 jw_udf = make_jw_udf(0.1)  # the distcalc default, R/distances.R:32
 jw_udf_p0 = make_jw_udf(0.0)  # the vignette variant, vignettes/example.rmd:102-105
 
-_osa_cache: dict = {}
-_osa_norm_cache: dict = {}
 
-
-@pandas_udf(DoubleType())
-def osa_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def osa_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     """Raw OSA edit distance."""
-    from capelinker_spark.functions import _native
-
-    return _pairwise_unique(
-        a, b, osa_dist, _osa_cache,
-        batch_fn=lambda ss, ts: _native.osa_batch(ss, ts, normalize=False),
-    )
+    out = _native.osa_batch(a, b, normalize=False)
+    return out if out is not None else _python_batch(a, b, osa_dist)
 
 
-@pandas_udf(DoubleType())
-def osa_norm_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+@arrow_udf(DoubleType())
+def osa_norm_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     """Normalized OSA distance (1 - stringsim), the ``{v}dist_osa`` feature."""
-    from capelinker_spark.functions import _native
-
-    return _pairwise_unique(
-        a, b, osa_norm_dist, _osa_norm_cache,
-        batch_fn=lambda ss, ts: _native.osa_batch(ss, ts, normalize=True),
-    )
+    out = _native.osa_batch(a, b, normalize=True)
+    return out if out is not None else _python_batch(a, b, osa_norm_dist)
 
 
 # ---------------------------------------------------------------------------

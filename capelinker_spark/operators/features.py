@@ -2,7 +2,7 @@
 training-script feature family (SURVEY §2.4, F1-F15).
 
 All features are native expressions except the JW/OSA string metrics, which
-run in Arrow-vectorized pandas UDFs batched into a single projection (one
+run in Arrow UDFs over the C kernels, batched into a single projection (one
 Arrow round-trip for all UDF columns in the same select).
 """
 
@@ -88,14 +88,23 @@ def add_matches(dat: DataFrame, id_from: str = "persid_from") -> DataFrame:
     runs on the key column alone and the join-back is a broadcast (or,
     at scale, reuses the existing hash partitioning on ``id_from``) —
     same values, one wide-row sort removed from the pipeline's widest
-    table (guide §2.4)."""
+    table (guide §2.4).
+
+    An existing ``matches`` column raises (the join-back would duplicate
+    it); the join key gets a name no input column has."""
+    taken = {c.lower() for c in dat.columns}  # Spark resolves names case-insensitively
+    if "matches" in taken:
+        raise ValueError("add_matches: the input already has a 'matches' column")
+    key = "_mk"
+    while key in taken:
+        key = f"_{key}"
     cnt = (
-        dat.groupBy(F.col(id_from).alias("_mk"))
+        dat.groupBy(F.col(id_from).alias(key))
         .agg(F.count("*").alias("matches"))
     )
     return dat.join(
-        cnt, F.col(id_from).eqNullSafe(F.col("_mk"))
-    ).drop("_mk")
+        cnt, F.col(id_from).eqNullSafe(F.col(key))
+    ).drop(key)
 
 
 def add_gauss(
@@ -531,7 +540,7 @@ def _greedy_absorb(
         if dists is None:
             dists = [jaro_winkler_dist(head, s, p=0.1) for s in remaining]
         else:
-            dists = dists.tolist()
+            dists = dists.to_pylist()
         kept = []
         for s, d in zip(remaining, dists):
             if q is not None:

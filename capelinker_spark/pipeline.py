@@ -381,12 +381,17 @@ class LinkagePipeline(StageRunner):
         arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
         prev = self.spark.conf.get(arrow_key, None)
         self.spark.conf.set(arrow_key, "true")
+        ids = ["persid_from", "persid_to"]
         try:
-            pdf = sample.select(*cols).toPandas()
+            pdf = sample.select(*ids, *cols).toPandas()
         finally:
             if prev is None:
                 self.spark.conf.unset(arrow_key)
             else:
                 self.spark.conf.set(arrow_key, prev)
+        # rows arrive in shuffle-fetch order, and train_logistic's sums
+        # round differently in another order: sort by pair ids so the
+        # weights do not depend on partitioning or task timing
+        pdf = pdf.sort_values(ids, kind="stable", ignore_index=True).drop(columns=ids)
         features = [c for c in cols if c != "correct"]
         return train_logistic(pdf, features, seed=cfg.seed)

@@ -512,3 +512,23 @@ class TestSoftTfidf:
         # 0.0, not a divide-by-zero (ANSI-mode regression)
         sims = self._sim(spark, [(1, "rose lace", "rose lace")])
         assert sims[1] == 0.0
+
+
+def test_add_matches_rejects_existing_matches_column(spark):
+    df = spark.createDataFrame([(1, 2, 5)], "persid_from long, persid_to long, matches long")
+    with pytest.raises(ValueError, match="matches"):
+        FE.add_matches(df, "persid_from")
+
+
+def test_add_matches_input_column_named_like_join_key(spark):
+    """Input columns named like the join-back key (any case) stay intact and
+    the counts are right, NULL ids grouping together."""
+    rows = [(1, 10, "a", "x"), (1, 11, "b", "y"), (2, 12, "c", "z"),
+            (None, 13, "d", "w"), (None, 14, "e", "v")]
+    df = spark.createDataFrame(
+        rows, "persid_from long, persid_to long, _mk string, `__MK` string"
+    )
+    out = FE.add_matches(df, "persid_from")
+    assert out.columns == df.columns + ["matches"]
+    got = {r["persid_to"]: tuple(r) for r in out.collect()}
+    assert got == {r[1]: r + (c,) for r, c in zip(rows, (2, 2, 1, 2, 2))}

@@ -86,6 +86,38 @@ def test_pairwise_f1_gate(result, truth):
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} (|pred|={len(pred)}, |true|={len(true)})"
 
 
+def test_training_and_links_independent_of_partitioning(
+    spark, pages, truth, result, workdir, tmp_path
+):
+    """Shuffle partitions 3 and 8 train bit-identical weights and select
+    identical links: the training rows reach the driver in shuffle-fetch
+    order, which must not leak into the weights. The 8-partition side is
+    the module's run (the session default), read before any later test
+    rewrites its workdir."""
+    import json
+
+    def model_and_links(wd, res):
+        with open(f"{wd}/model.json") as fh:
+            model = json.load(fh)
+        links = res["links"].select("persid_from", "persid_to", "predicted")
+        return model, sorted(tuple(r) for r in links.collect())
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "8"
+    at8 = model_and_links(workdir, result)
+    spark.conf.set(key, "3")
+    try:
+        wd = str(tmp_path / "parts3")
+        res3 = LinkagePipeline(spark, wd, PipelineConfig()).run(
+            pages, truth, resume=False
+        )
+        at3 = model_and_links(wd, res3)
+    finally:
+        spark.conf.set(key, "8")
+    assert at3[0] == at8[0]
+    assert at3[1] == at8[1]
+
+
 def test_clusters_cover_all_records(result):
     n_records = result["records"].count()
     clusters = result["clusters"]

@@ -168,8 +168,14 @@ def test_c_kernel_bitwise():
     """The C batch kernels are BIT-IDENTICAL to the pure-Python semantics
     oracle (golden vectors + seeded random strings incl. unicode & empties).
     This is the contract that keeps the oracle queries hash-exact (the
-    Python kernel is itself bit-identical to DuckDB's jaro_similarity)."""
+    Python kernel is itself bit-identical to DuckDB's jaro_similarity).
+
+    Lists and Arrow arrays enter through the same C entry; the Arrow cases
+    cover 2-, 3- and 4-byte UTF-8, NULL on either side, empty strings, a
+    sliced array (non-zero offset) and large_string."""
     import random
+
+    import pyarrow as pa
 
     from capelinker_spark.functions import _native
     from capelinker_spark.functions.strdist import (
@@ -192,16 +198,69 @@ def test_c_kernel_bitwise():
     ss = [random.choice(words) for _ in range(20000)]
     ts = [random.choice(words) for _ in range(20000)]
     for p in (0.0, 0.1):
-        cv = _native.jw_batch(ss, ts, p)
-        assert cv is not None
+        cv = _native.jw_batch(ss, ts, p).to_pylist()
         for i in range(len(ss)):
             assert cv[i] == jaro_winkler_dist(ss[i], ts[i], p=p), (ss[i], ts[i], p)
-    cv = _native.osa_batch(ss[:5000], ts[:5000], normalize=False)
+    cv = _native.osa_batch(ss[:5000], ts[:5000], normalize=False).to_pylist()
     for i in range(5000):
         assert cv[i] == osa_dist(ss[i], ts[i])
-    cv = _native.osa_batch(ss[:5000], ts[:5000], normalize=True)
+    cv = _native.osa_batch(ss[:5000], ts[:5000], normalize=True).to_pylist()
     for i in range(5000):
         assert cv[i] == osa_norm_dist(ss[i], ts[i])
+
+    # Arrow entry: multi-byte UTF-8 (2-byte é/ß, 3-byte €/中, 4-byte 😀/𝄞),
+    # NULLs and empties on both sides
+    al = "abcdeé ßœ€中文😀𝄞"
+    words = [
+        "".join(random.choice(al) for _ in range(random.randint(0, 12)))
+        for _ in range(300)
+    ] + ["", None, "😀", "中文", "𝄞a€"]
+    ss = [random.choice(words) for _ in range(4000)]
+    ts = [random.choice(words) for _ in range(4000)]
+    assert None in ss and None in ts and "" in ss and "" in ts
+    kernels = [
+        (lambda a, b: _native.jw_batch(a, b, 0.1), jaro_winkler_dist),
+        (lambda a, b: _native.osa_batch(a, b, normalize=False), osa_dist),
+        (lambda a, b: _native.osa_batch(a, b, normalize=True), osa_norm_dist),
+    ]
+    large = pa.large_string()
+    cases = [
+        (pa.array(ss), pa.array(ts)),
+        # sliced arrays: the element offset applies to offsets and validity
+        (pa.array(ss)[5:-3], pa.array(ts)[2:-6]),
+        (pa.array(ss, large), pa.array(ts)),
+        (pa.array(ss, large)[9:], pa.array(ts, large)[:-9]),
+    ]
+    for a, b in cases:
+        assert len(a) == len(b)
+        want_s, want_t = a.to_pylist(), b.to_pylist()
+        for batch, fn in kernels:
+            got = batch(a, b)
+            assert got.type == pa.float64() and len(got) == len(a)
+            want = [fn(x, y) for x, y in zip(want_s, want_t)]
+            assert got.to_pylist() == want
+            assert got.null_count == sum(w is None for w in want) > 0
+    assert _native.jw_batch([], [], 0.1).to_pylist() == []
+    assert _native.jw_batch(["", None], [None, ""], 0.1).to_pylist() == [None, None]
+
+
+def test_udf_python_fallback_matches_c(monkeypatch):
+    """Without the native library the JW/OSA UDF bodies score pair by pair
+    in Python: same values and NULLs as the C path."""
+    import pyarrow as pa
+
+    from capelinker_spark.functions import _native
+    from capelinker_spark.functions.strdist import osa_norm_udf
+
+    a = pa.array(["jong", "smid", None, "CA", "", "smößen"])
+    b = pa.array(["jongh", "smit", "x", "AC", "", "smoessen"])
+    udfs = (jw_udf.func, osa_udf.func, osa_norm_udf.func)
+    c_path = [f(a, b) for f in udfs]
+    monkeypatch.setattr(_native, "_load", lambda: None)
+    for f, want in zip(udfs, c_path):
+        got = f(a, b)
+        assert got.type == pa.float64()
+        assert got.to_pylist() == want.to_pylist()
 
 
 def test_smith_waterman_golden_vectors():
