@@ -8,7 +8,9 @@ instrumentation the optimization round needs. Usage:
 
   python bench_extra.py time  <query> [...]      # N samples, noop + count
   python bench_extra.py plan  <tag> <query> [..] # plans/<tag>/<query>_<suffix>.txt
-  python bench_extra.py linkage                  # per-stage linkage timing
+
+The per-stage linkage breakdown lives in ``perfbench/run.py --trace 1``,
+which reports it per layer.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default 32) — same contract as bench.py; BENCH_EXTRA_REPEATS (default 2),
@@ -19,9 +21,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -94,57 +94,12 @@ def write_plans(tag: str, names: list[str]) -> None:
         stop_spark(spark)
 
 
-def time_linkage() -> None:
-    """Per-stage wall decomposition of the headline pipeline (resume=False,
-    same entry shape as bench.run_linkage) using the lineage log each stage
-    writes, plus total wall."""
-    from bench import N_ENTITIES, write_corpus
-
-    data_dir = tempfile.mkdtemp(prefix="capelinker_extra_data_")
-    workdir = tempfile.mkdtemp(prefix="capelinker_extra_wd_")
-    try:
-        write_corpus(N_ENTITIES, data_dir)
-        spark = make_session(CPUS)
-        from capelinker_spark.pipeline import LinkagePipeline, PipelineConfig
-
-        pages = spark.read.parquet(f"{data_dir}/pages")
-        truth = spark.read.parquet(f"{data_dir}/truth")
-        s0, t0 = read_steal(), time.time()
-        pipe = LinkagePipeline(spark, workdir, PipelineConfig(salt=8))
-        res = pipe.run(pages, truth, resume=False)
-        n_pairs = res["features"].count()
-        n_links = res["links"].count()
-        dt = time.time() - t0
-        stages = {
-            r["stage"]: round(r.get("elapsed_sec", 0.0), 3)
-            for r in pipe.lineage.entries()
-        }
-        print(
-            "LINKAGE "
-            + json.dumps(
-                {
-                    "total": round(dt, 3),
-                    "steal": read_steal() - s0,
-                    "pairs": n_pairs,
-                    "links": n_links,
-                    "stages": stages,
-                }
-            )
-        )
-        stop_spark(spark)
-    finally:
-        shutil.rmtree(data_dir, ignore_errors=True)
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
 def main() -> None:
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "time":
         time_queries(sys.argv[2:])
     elif cmd == "plan":
         write_plans(sys.argv[2], sys.argv[3:])
-    elif cmd == "linkage":
-        time_linkage()
     else:
         raise SystemExit(f"unknown command {cmd!r}")
 

@@ -61,12 +61,11 @@ def read_pkg_source(src_path: str) -> bytes | None:
     return None
 
 
-def build_shared(src_path: str, prefix: str, extra_cc_args: tuple = ()) -> str | None:
+def build_shared(src_path: str, prefix: str) -> str | None:
     """Compile a package C source into the per-user cache and return the
     .so path (None on any failure → caller falls back to pure Python).
-    Shared by every native tier (_strdistc, _jpegshim): one md5-tagged
-    build per source version; concurrent workers race safely on the
-    atomic rename."""
+    One md5-tagged build per source version; concurrent workers race
+    safely on the atomic rename."""
     src = read_pkg_source(src_path)
     if src is None:
         return None
@@ -84,8 +83,7 @@ def build_shared(src_path: str, prefix: str, extra_cc_args: tuple = ()) -> str |
         tmp = so + f".tmp{os.getpid()}"
         try:
             subprocess.run(
-                ["cc", "-O2", "-fPIC", "-shared", "-o", tmp, csrc,
-                 *extra_cc_args],
+                ["cc", "-O2", "-fPIC", "-shared", "-o", tmp, csrc],
                 check=True,
                 capture_output=True,
                 timeout=60,
@@ -94,10 +92,6 @@ def build_shared(src_path: str, prefix: str, extra_cc_args: tuple = ()) -> str |
         except Exception:
             return None
     return so
-
-
-def _build() -> str | None:
-    return build_shared(_SRC, "strdistc")
 
 
 class _StrView(ctypes.Structure):
@@ -122,7 +116,7 @@ def _load():
     _TRIED = True
     if os.environ.get("CAPELINKER_NO_NATIVE"):
         return None
-    so = _build()
+    so = build_shared(_SRC, "strdistc")
     if so is None:
         return None
     try:

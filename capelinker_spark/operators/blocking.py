@@ -727,10 +727,17 @@ def prefix_jaccard_pairs(
 
     Skew: ``max_token_freq`` drops tokens whose document frequency
     exceeds the cap from PREFIXES only (verification is untouched).
-    Dropping prefix tokens can only lose candidates whose every prefix
-    token is a stop word, so a non-None cap makes the result
-    APPROXIMATE and must be disclosed — same contract as
-    ``max_bucket_size`` on the LSH joins.
+    The exact loss: a pair of records with DIFFERENT token sets is
+    dropped iff every token their two prefixes share exceeds the cap.
+    Each record may still keep uncapped prefix tokens of its own (sets
+    {a, b} and {b, c} at t = 0.3 with only b capped are lost). Members
+    of one identical set always pair. The positional filter adds no
+    loss: capped tokens sort after every uncapped one under (df, token),
+    so when any shared prefix token survives, the pair's first common
+    token is uncapped and its join row keeps the tight bound; positions
+    are taken before the cap, so surviving rows keep their true
+    positions. A non-None cap makes the result APPROXIMATE and must be
+    disclosed — same contract as ``max_bucket_size`` on the LSH joins.
 
     Returns ``(id_from, id_to, n_common, jaccard)`` with
     id_from < id_to. Records with no tokens never pair (Jaccard

@@ -17,9 +17,9 @@ quality, curation) consumes.  This module supplies that front end:
   splitter/writer pair for the ISO 28500 record framing used by Common
   Crawl, plus :func:`warc_to_documents`, the distributed Arrow tier
   (``mapInPandas`` over a binary column, one pass, no driver collect).
-  Same two-tier shape as ``media_avi.py`` (RIFF walker → codec): the
-  byte-format walker is plain Python verified by round-trip pytest, the
-  Spark seam is schema-stable and batch-shaped for 100-TB scan fan-out.
+  Two tiers: the byte-format walker is plain Python verified by
+  round-trip pytest, the Spark seam is schema-stable and batch-shaped
+  for 100-TB scan fan-out.
 
 Regex-dialect rules honored (engine-wide conventions, see
 ``textstats.WS_SPLIT``): no ``\\s``, no backreferences (RE2 lacks them —
@@ -331,7 +331,7 @@ def split_warc_records(data: bytes) -> list[dict]:
     (payload may contain 'WARC/1.0' bytes — never split by marker
     scanning), tolerant of trailing garbage shorter than a header;
     raises ValueError on a malformed header block or a truncated
-    payload, mirroring the media_avi error contract."""
+    payload, so a corrupt capture never yields a silent partial record."""
     records: list[dict] = []
     pos = 0
     n = len(data)

@@ -341,6 +341,53 @@ def test_prefix_jaccard_plan_and_cap(spark):
     with pytest.raises(ValueError):
         prefix_jaccard_pairs(df, "s", threshold=0.0)
 
+    # the cap's exact loss, by brute force: pairs of DIFFERENT token sets
+    # whose shared prefix tokens all exceed the cap. Rows 1-2 are the
+    # counterexample shape: each prefix keeps an uncapped token of its
+    # own (p, r), only the shared q is capped. Rows 40-41 are identical
+    # all-capped sets, which still pair.
+    import random
+    from collections import Counter
+
+    rng = random.Random(7)
+    vocab = [f"v{k}" for k in range(20)]
+    rows = (
+        [(1, "p q"), (2, "q r")]
+        + [(i, f"q x{i}") for i in range(3, 15)]
+        + [(40, "q"), (41, "q")]
+        + [
+            (i, " ".join(rng.sample(vocab[: rng.randint(5, 20)], rng.randint(3, 5))))
+            for i in range(50, 100)
+        ]
+    )
+    t, cap = 0.3, 12
+    df = spark.createDataFrame(rows, "id long, s string")
+    exact = set(_brute_jaccard(rows, t))
+    capped = {
+        (r["id_from"], r["id_to"])
+        for r in prefix_jaccard_pairs(
+            df, "s", threshold=t, max_token_freq=cap
+        ).collect()
+    }
+    toks = {i: set(s.split()) for i, s in rows}
+    dfreq = Counter(w for ts in toks.values() for w in ts)
+    q = round(t * 1_000_000)
+
+    def prefix(ts):
+        n = len(ts)
+        return set(sorted(ts, key=lambda w: (dfreq[w], w))[
+            : n - (n * q + 999_999) // 1_000_000 + 1
+        ])
+
+    lost = {
+        (a, b) for a, b in exact
+        if toks[a] != toks[b]
+        and all(dfreq[w] > cap for w in prefix(toks[a]) & prefix(toks[b]))
+    }
+    assert (1, 2) in lost and dfreq["p"] <= cap and dfreq["r"] <= cap
+    assert (40, 41) in capped
+    assert capped == exact - lost
+
 
 def test_blocking_rule_coverage_null_keys_consistent(spark):
     """Rows with a NULL key are dropped from BOTH count tiers: the

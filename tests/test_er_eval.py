@@ -53,6 +53,16 @@ def test_pairwise_cluster_metrics_hand_computed(spark):
     assert row["recall"] == pytest.approx(0.5)
     assert row["f1"] == pytest.approx(0.5)
 
+    # all-singleton clusterings: zero pairs on every side, so each ratio
+    # is 0/0 -> NULL (as DuckDB gives), not an ANSI divide-by-zero abort
+    singletons = spark.createDataFrame(
+        [(1, "a", "x"), (2, "b", "y"), (3, "c", "z")],
+        "id long, canonical_id string, entity_id string",
+    )
+    row = pairwise_cluster_metrics(singletons).collect()[0]
+    assert (row["pairs_pred"], row["pairs_gold"], row["pairs_true"]) == (0, 0, 0)
+    assert (row["precision"], row["recall"], row["f1"]) == (None, None, None)
+
     plan = pairwise_cluster_metrics(assign)._jdf.queryExecution() \
         .executedPlan().toString()
     # combinatoric counting only: no join of the assignment table with

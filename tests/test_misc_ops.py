@@ -109,39 +109,6 @@ def test_preflight_expected_classes(spark):
         preflight(ok, modstring="no_such_model")
 
 
-def test_multimodal_custom_decoder_and_magic(spark):
-    """Pluggable decode_fn runs through the mapInPandas plumbing; magic-byte
-    sniffing works on RAW bytes (0x89/0xFFD8 are invalid UTF-8 — the old
-    cast-to-string sniff could never match them)."""
-    from capelinker_spark.operators.multimodal import (
-        binary_metadata,
-        extract_image_features,
-    )
-
-    rows = [
-        ("u1", bytearray(b"\x89PNG\r\n\x1a\nxxxx")),
-        ("u2", bytearray(b"\xff\xd8\xff\xe0JFIF")),
-        ("u3", bytearray(b"<!DOCTYPE html><p>")),
-        ("u4", bytearray(b"RIFFxxxxWAVE")),
-        ("u5", bytearray(b"garbage")),
-        ("u6", bytearray(b"RIFFxxxxAVI void")),
-        ("u7", bytearray(b"RIFFxxxxLIST")),  # RIFF, but neither wav nor avi
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    fmts = {r["url"]: r["format"] for r in binary_metadata(df).collect()}
-    assert fmts == {
-        "u1": "png", "u2": "jpeg", "u3": "html", "u4": "wav",
-        "u5": "unknown", "u6": "avi", "u7": "riff",
-    }
-
-    feats = extract_image_features(
-        df, decode_fn=lambda payload: [float(len(payload)), float(payload[0])]
-    ).collect()
-    by_url = {r["url"]: r["image_features"] for r in feats}
-    assert by_url["u1"] == [12.0, 137.0]
-    assert by_url["u2"][1] == 255.0
-
-
 def test_lsh_bucket_cap(spark):
     """max_bucket_size drops mega-buckets from the banded join (documented
     cap); without it, identical docs pair quadratically."""

@@ -1,13 +1,11 @@
-"""Text analysis + multimodal plumbing tests."""
+"""Text analysis tests: language, token counts, quality, fingerprints, PII."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from capelinker_spark.operators import multimodal as M
 from capelinker_spark.operators import textstats as T
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
@@ -66,45 +64,6 @@ def test_fingerprint_stable_under_tail_edit(spark):
     got = [r["fp"] for r in df.select(T.fingerprint(F.col("t")).alias("fp")).collect()]
     assert got[0] == got[1]  # min-shingle fingerprint survives a tail append
     assert got[0] != got[2]
-
-
-def test_image_feature_plumbing(spark, pages):
-    out = M.extract_image_features(pages.limit(20), binary_col="html", id_col="url")
-    rows = out.collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert len(r["image_features"]) == M.IMAGE_FEATURE_DIM
-        assert all(0 <= x < 1 for x in r["image_features"])
-        assert r["n_bytes"] > 0
-    # determinism: same payload → same features
-    again = {r["url"]: r["image_features"] for r in M.extract_image_features(
-        pages.limit(20).repartition(3), binary_col="html", id_col="url").collect()}
-    for r in rows:
-        assert again[r["url"]] == r["image_features"]
-
-
-def test_decode_image_stub_raises():
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"\x89PNG....", fake=False)
-
-
-def test_frame_sample_plan(spark, pages):
-    meta = M.binary_metadata(pages.limit(5), "html")
-    plan = M.frame_sample_plan(meta, n_frames=4)
-    rows = plan.collect()
-    assert len(rows) == 20
-    by_url = {}
-    for r in rows:
-        by_url.setdefault(r["url"], []).append(r["frame_index"])
-    for v in by_url.values():
-        assert sorted(v) == [0, 1, 2, 3]
-
-
-def test_binary_metadata(spark, pages):
-    out = M.binary_metadata(pages.limit(5), "html")
-    for r in out.collect():
-        assert r["format"] == "html"
-        assert r["n_bytes"] > 100
 
 
 def test_pii_counts(spark):
