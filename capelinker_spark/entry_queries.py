@@ -2142,10 +2142,9 @@ def st1_streaming_window_agg(spark, sf_dir):
     TIMESTAMP_NTZ, so the hour bucket is ``date_trunc`` on the naive value
     and the output string never passes through session-timezone math; the
     double sum runs through DECIMAL(18,2) so accumulation order can't
-    change the result. The watermarked tumbling-window variant (which
-    needs an instant-typed event time) lives in streaming.page_ingest_stats
-    and is locked stream≡batch by tests/test_streaming.py — this query is
-    its driver-visible, oracle-checked face."""
+    change the result. The query is the repo's one streaming surface: it
+    uses ``spark.readStream`` directly, and the oracle comparison is its
+    stream≡batch check."""
     import hashlib as _hl
     import os as _os
     import tempfile as _tf

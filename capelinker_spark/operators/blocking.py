@@ -137,14 +137,19 @@ def sorted_neighborhood_pairs(
 
     A plain ``Window.orderBy`` with no partitionBy would funnel the whole
     table through ONE task (Exchange SinglePartition) — the round-1 plan
-    audit's scale-killer. Here every step is parallel and lazy: the
+    audit's scale-killer. Here every step is parallel: the
     cross-partition offsets cumulate through a bounded triangular join
     over one count per partition (≤ shuffle-partitions rows), the
     per-partition window runs on already-sorted data, and the offset and
-    position passes see identical range boundaries by sharing one range
-    exchange (ReusedExchange). Returns (id_from, id_to).
+    position passes see identical range boundaries by sharing one
+    checkpointed range exchange (``packing._range_offsets``, the same
+    scaffold as ``assign_packed_sequences``). ``reliable_checkpoint=True``
+    checkpoints to the reliable checkpoint dir instead of executor-local
+    blocks. Returns (id_from, id_to).
     """
     from pyspark.sql import Window
+
+    from capelinker_spark.operators.packing import _range_offsets
 
     a = df_from.select(F.col(id_from).alias("_id"), F.col(key).alias("_k")).withColumn(
         "_side", F.lit("f")
@@ -155,39 +160,9 @@ def sorted_neighborhood_pairs(
     u = a.unionByName(b).where(F.col("_k").isNotNull())
     # deterministic total order: key, then side, then id
     order = ["_k", "_side", "_id"]
-    spark = u.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Fully LAZY offsets (optimization round 7, shared recipe with
-    # operators/packing.py): the checkpoint is now LAZY (eager=False) —
-    # all passes share one checkpointed RDD so range boundaries and
-    # `_pid` stay a single materialized assignment, but nothing executes
-    # at plan-build time — and the driver collect is replaced by a
-    # bounded triangular join (<= shuffle-partitions rows) broadcast
-    # back. ``reliable_checkpoint=True`` writes to the reliable
-    # checkpoint dir instead of executor-local blocks — use it on
-    # clusters with executor churn, where a lost local block cannot be
-    # recomputed through the truncated lineage (same escape hatch as
-    # cluster.connected_components)
-    srt = (
-        u.repartitionByRange(n_part, *order)
-        .sortWithinPartitions(*order)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    srt = (
-        srt.checkpoint(eager=False)
-        if reliable_checkpoint
-        else srt.localCheckpoint(eager=False)
-    )
-    tot = srt.groupBy("_pid").agg(F.count("*").alias("_n"))
-    prev = tot.select(F.col("_pid").alias("_ppid"), F.col("_n").alias("_pn"))
-    off_df = (
-        tot.join(F.broadcast(prev), F.col("_ppid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_pn"), F.lit(0)).cast("long").alias("_off"))
-    )
     w = Window.partitionBy("_pid").orderBy(*order)
     pos = (
-        srt.join(F.broadcast(off_df), "_pid")
+        _range_offsets(u, order, F.count("*"), reliable_checkpoint)
         .withColumn("_pos", F.col("_off") + F.row_number().over(w))
         .drop("_pid", "_off")
     )

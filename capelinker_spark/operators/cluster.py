@@ -24,12 +24,13 @@ def checkpoint_truncated(df: DataFrame, reliable: bool = False) -> DataFrame:
     join MULTIPLIES its children's sizes, so a checkpoint leaf that starts
     at the ~6×-per-iteration product re-enters the next iteration's
     multiplications and the stat grows EXPONENTIALLY in digit count —
-    measured here: 1,662 digits after one incremental-CC fold, and by the
-    third chained fold the driver spent minutes single-threaded inside
-    ``BigInteger.multiply`` under the optimizer's ``InjectRuntimeFilter``
-    size checks. Rebuilding the frame over the ALREADY-CHECKPOINTED
-    physical RDD (no recompute) drops ``originStats``, so every iteration
-    restarts from the small default estimate.
+    measured here: 1,662 digits after one fold of a CC result into a
+    running label table, and by the third chained fold the driver spent
+    minutes single-threaded inside ``BigInteger.multiply`` under the
+    optimizer's ``InjectRuntimeFilter`` size checks. Rebuilding the frame
+    over the ALREADY-CHECKPOINTED physical RDD (no recompute) drops
+    ``originStats``, so every iteration restarts from the small default
+    estimate.
 
     Falls back to the plain checkpoint if the internal constructor drifts
     across Spark versions — correctness is unaffected either way."""
@@ -219,91 +220,6 @@ def cluster_links(
         .drop("component")
     )
     return out
-
-
-def update_components(
-    labels: DataFrame,
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    collect_stats: dict | None = None,
-) -> DataFrame:
-    """Fold one NEW wave of edges into an existing (node, component) label
-    table — the streaming/incremental analog of ``expand_index``
-    (R/util.R:14-44: "fold a new wave of links into an existing index"),
-    and the per-micro-batch step of ``streaming.stream_cluster_links``.
-
-    Only the batch-AFFECTED subgraph is re-propagated: each new edge's
-    endpoints are mapped to their current component (unseen nodes map to
-    themselves), self-loops drop out, and full ``connected_components``
-    runs on that small component-level graph — its size is bounded by the
-    batch, never by the accumulated graph. The resulting old→new mapping
-    is applied to the label table with ONE join (mapping is batch-sized →
-    broadcast under AQE), so the 100-TB-scale cost per batch is one
-    narrow rewrite of the label table, not a global re-clustering. Labels
-    stay min-id-deterministic: components only ever merge, and the merged
-    id is the min over the union (min of mins).
-
-    Returns the UPDATED full label table (existing rows re-labeled, new
-    nodes appended with their component).
-
-    ``collect_stats``: pass a dict to receive per-fold metrics —
-    ``affected_components`` (nodes of the component-level graph),
-    ``merged_components`` (old→new mappings that actually change a
-    label), ``new_nodes`` (first-seen ids). Every count runs on a
-    BATCH-bounded frame (the mapping and new-node sets), never on the
-    accumulated label table, and the counted frames are pinned with
-    localCheckpoint so the metric action and the downstream join share
-    one materialization — at 100 TB the "is incremental CC still flat?"
-    question is answered from these rows, not from reruns.
-    """
-    e = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
-    la = labels.select(F.col("node").alias("_a"), F.col("component").alias("_ca"))
-    lb = labels.select(F.col("node").alias("_b"), F.col("component").alias("_cb"))
-    comp_edges = (
-        e.join(la, "_a", "left")
-        .join(lb, "_b", "left")
-        .select(
-            F.coalesce("_ca", "_a").alias("src"),
-            F.coalesce("_cb", "_b").alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    mapping = connected_components(comp_edges).select(
-        F.col("node").alias("_old_c"), F.col("component").alias("_new_c")
-    )
-    if collect_stats is not None:
-        mapping = mapping.localCheckpoint(eager=True)
-        collect_stats["affected_components"] = mapping.count()
-        collect_stats["merged_components"] = mapping.where(
-            F.col("_old_c") != F.col("_new_c")
-        ).count()
-
-    relabeled = (
-        labels.join(mapping, labels["component"] == mapping["_old_c"], "left")
-        .select(
-            "node",
-            F.coalesce("_new_c", "component").alias("component"),
-        )
-    )
-    # brand-new nodes: appear in this batch's edges but not in the table.
-    # Every one of them is a node of the component graph (a new endpoint
-    # maps to itself and cannot self-loop away), but coalesce keeps the
-    # self-label fallback anyway.
-    new_nodes = (
-        e.select(F.col("_a").alias("node"))
-        .union(e.select(F.col("_b").alias("node")))
-        .distinct()
-        .join(labels.select("node"), "node", "left_anti")
-    )
-    if collect_stats is not None:
-        new_nodes = new_nodes.localCheckpoint(eager=True)
-        collect_stats["new_nodes"] = new_nodes.count()
-    new_rows = new_nodes.join(
-        mapping, new_nodes["node"] == mapping["_old_c"], "left"
-    ).select("node", F.coalesce("_new_c", "node").alias("component"))
-    return relabeled.unionByName(new_rows)
 
 
 def pagerank(

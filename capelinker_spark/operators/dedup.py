@@ -148,9 +148,9 @@ def band_rows(
     bands: int = 4,
 ) -> DataFrame:
     """Signature table → ``(id, band, key)`` LSH bucket rows; key =
-    md5 of the band's signature rows. Shared by the batch pair join and
-    the incremental/streaming dedup (identical keys ⇒ stream ≡ batch
-    candidate sets)."""
+    md5 of the band's signature rows: deterministic per document, so the
+    same signatures land in the same buckets in every run and partitioning
+    (identical keys ⇒ identical candidate sets)."""
     rows = num_hashes // bands
     band_structs = []
     for b in range(bands):

@@ -557,8 +557,8 @@ def cluster_diff(
     """Split/merge diff between two clusterings of the same records —
     the incremental-ER ops question ("what did this rerun / this batch
     of new links DO to my entities?") that a bare metric number hides.
-    Pairs with ``streaming.update_components``: run it on consecutive
-    component snapshots to audit churn per wave.
+    Run it on consecutive ``connected_components`` snapshots to audit
+    churn per rerun.
 
     Records present in both assignment tables (inner join on id) are
     classified per NEW cluster:

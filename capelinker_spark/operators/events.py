@@ -29,13 +29,10 @@ def sessionize(
     (ts, id) — id breaks timestamp ties.
 
     Adds ``session`` (1-based per-user index) and ``session_start`` (the
-    session's first event time — the COLLISION-FREE session key: unlike the
-    running index, it stays unique per user even when a streaming engine
-    evicts idle-user state and restarts the counter, so (user,
-    session_start) is the cross-engine/batch≡stream join key; see
-    streaming.stream_sessionize). One window (sort by user, ts) + two
-    running aggregates over the SAME frame — still a single shuffle on the
-    user key."""
+    session's first event time, so (user, session_start) names a session
+    by its data rather than by a per-user counter). One window (sort by
+    user, ts) + two running aggregates over the SAME frame — still a
+    single shuffle on the user key."""
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     gap = F.col(ts_col) - F.lag(ts_col).over(w)
     boundary = F.when(

@@ -4,14 +4,12 @@ deterministic global order, to fixed-token-budget windows (the
 
 The math is a GLOBAL integer prefix sum of per-document token counts —
 the textbook case where a naive ``Window.orderBy`` funnels the whole
-table through one task (Exchange SinglePartition). Here it reuses the
-distributed-offset pattern from ``blocking.sorted_neighborhood_pairs``:
+table through one task (Exchange SinglePartition). Here it is a
+distributed offset (``_range_offsets``, which also gives
+``blocking.sorted_neighborhood_pairs`` its global positions):
 range-partition by the order key, per-partition running sums on sorted
 data, with cross-partition offsets cumulated through a bounded
-triangular join over one row per partition and broadcast back. Every
-step is partition-parallel and LAZY — no driver collect, no eager
-materialization; the range exchange is shared between the totals and
-final passes (ReusedExchange).
+triangular join over one row per partition and broadcast back.
 
 Exactness: counts and prefix sums are LONGS; the window id is integer
 division — bit-identical to a SQL ``SUM() OVER (ORDER BY ...)`` oracle.
@@ -19,8 +17,47 @@ division — bit-identical to a SQL ``SUM() OVER (ORDER BY ...)`` oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _range_offsets(
+    df: DataFrame, order: list[str], total: Column, reliable: bool
+) -> DataFrame:
+    """Distributed zipWithIndex / prefix-sum scaffold: ``df``
+    range-partitioned and sorted by ``order``, plus ``_pid`` (partition
+    id) and ``_off`` (LONG sum of the aggregate ``total`` over every
+    EARLIER partition, via a triangular join over <= shuffle-partitions
+    rows broadcast back — no driver collect). A window over ``_pid``
+    ordered by ``order`` then finishes the global running value.
+
+    The totals and the returned rows read ONE checkpointed RDD, so
+    ``_pid`` is a single assignment: a re-run range exchange re-samples
+    its bounds, which shifts boundary rows and corrupts offsets
+    (verified at sf0.1). The range-bound sampling job runs when this
+    function builds the plan; the local checkpoint stays lazy and
+    materializes at the query's first action. ``reliable=True``
+    checkpoints to the reliable checkpoint dir (clusters with executor
+    churn, where a lost executor-local block cannot be recomputed through
+    the truncated lineage), eagerly: a lazy reliable checkpoint
+    recomputes its input up to 3× at the first action."""
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    srt = (
+        df.repartitionByRange(n_part, *order)
+        .sortWithinPartitions(*order)
+        .withColumn("_pid", F.spark_partition_id())
+    )
+    srt = (
+        srt.checkpoint(eager=True) if reliable else srt.localCheckpoint(eager=False)
+    )
+    tot = srt.groupBy("_pid").agg(total.alias("_t"))
+    prev = tot.select(F.col("_pid").alias("_ppid"), F.col("_t").alias("_pt"))
+    off_df = (
+        tot.join(F.broadcast(prev), F.col("_ppid") < F.col("_pid"), "left")
+        .groupBy("_pid")
+        .agg(F.coalesce(F.sum("_pt"), F.lit(0)).cast("long").alias("_off"))
+    )
+    return srt.join(F.broadcast(off_df), "_pid")
 
 
 def assign_packed_sequences(
@@ -47,48 +84,15 @@ def assign_packed_sequences(
     coalesce, a NULL count would propagate NULL into ``_start``/``seq_id``
     for that row AND silently shift every later offset (SUM skips NULLs),
     breaking the exact-long contract."""
-    spark = df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Fully LAZY distributed prefix sum (optimization round 7): the old
-    # form eagerly localCheckpoint-ed the range-partitioned input and
-    # collect()-ed per-partition totals to the driver at *plan build*
-    # time — a whole-input materialization before the query even ran.
-    # Now (1) the checkpoint is LAZY (eager=False): all passes share one
-    # checkpointed RDD, so `_pid` is still a single materialized
-    # assignment (range-bound sampling must not re-run per subtree —
-    # re-sampling shifts boundary rows and corrupts offsets, verified at
-    # sf0.1), but nothing executes until the query's own first action;
-    # and (2) per-partition totals cumulate through a bounded triangular
-    # join over <= n_part rows broadcast back instead of a driver
-    # collect. `reliable_checkpoint=True` writes to the reliable
-    # checkpoint dir for clusters with executor churn, where a lost
-    # executor-local block cannot be recomputed deterministically.
-    srt = (
-        df.repartitionByRange(n_part, order_col)
-        .sortWithinPartitions(order_col)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    srt = (
-        srt.checkpoint(eager=False)
-        if reliable_checkpoint
-        else srt.localCheckpoint(eager=False)
-    )
     cnt = F.coalesce(F.col(count_col).cast("long"), F.lit(0))
-    tot = srt.groupBy("_pid").agg(F.sum(cnt).alias("_t"))
-    prev = tot.select(F.col("_pid").alias("_ppid"), F.col("_t").alias("_pt"))
-    off_df = (
-        tot.join(F.broadcast(prev), F.col("_ppid") < F.col("_pid"), "left")
-        .groupBy("_pid")
-        .agg(F.coalesce(F.sum("_pt"), F.lit(0)).cast("long").alias("_off"))
-    )
+    srt = _range_offsets(df, [order_col], F.sum(cnt), reliable_checkpoint)
     w = Window.partitionBy("_pid").orderBy(order_col).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     cum_end = F.col("_off") + F.sum(cnt).over(w)
     start = (cum_end - cnt).alias("_start")
     out_df = (
-        srt.join(F.broadcast(off_df), "_pid")
-        .withColumn("_start", start)
+        srt.withColumn("_start", start)
         .withColumn(out, F.expr(f"_start div {int(tokens_per_seq)}"))
     )
     if offset_out:

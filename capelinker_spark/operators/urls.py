@@ -217,8 +217,8 @@ def snapshot_change_stats(
     tie_col: str = "doc_id",
 ):
     """Per-URL capture-history statistics — THE one implementation
-    behind batch dd14, the wt7 crawl frontier, and the streaming
-    snapshot-stats fold: capture count, consecutive-change count
+    behind batch dd14 and the wt7 crawl frontier: capture count,
+    consecutive-change count
     (fingerprints compared in deterministic (ts, tie) capture order),
     last capture time, and change_rate = changes/(snapshots−1) as ONE
     int/int IEEE division.

@@ -117,7 +117,9 @@ _ABS_HTTP = "(?i)^https?://"
 _ANY_SCHEME = "(?i)^[a-z][a-z0-9+.-]*:"
 _ORIGIN_RE = "(?i)^(https?://[^/?#]*)"
 _BASE_SCHEME_RE = "(?i)^(https?):"
-_BASE_DIR_RE = "^(.*/)"
+# base directory = text up to the last '/' BEFORE any query or fragment:
+# a '/' inside '?…' or '#…' is data, not a path separator
+_BASE_DIR_RE = "^([^?#]*/)"
 # host = authority after the LAST '@' (userinfo excluded — greedy
 # [^/?#]*@ cannot cross the path), before any ':' port
 _HOST_OF_URL_RE = "(?i)^https?://(?:[^/?#]*@)?([^/:?#]*)"
@@ -171,7 +173,8 @@ def resolve_href(base: Column, href: Column) -> Column:
     * root-relative ``/path`` — base origin prepended;
     * fragment-only / empty — NULL (same document);
     * everything else — relative: base directory (text up to the last
-      ``/``) prepended.
+      ``/`` of the base's path, ignoring any query or fragment)
+      prepended.
 
     Documented deviations from full RFC 3986 (extraction-tier scope,
     same stance as html_to_text vs an HTML5 parser): dot-segments

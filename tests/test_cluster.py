@@ -175,49 +175,20 @@ def test_connected_components_giant_component_stress(spark):
     assert comp.count() == n_chain + 1_001
 
 
-def test_update_components_folds_waves(spark):
-    """update_components (expand_index's incremental analog): folding edge
-    waves one at a time equals batch CC over the union; self-loops are
-    inert but still register the node; merges keep min-id determinism."""
-    from capelinker_spark.operators.cluster import (
-        checkpoint_truncated,
-        connected_components,
-        update_components,
-    )
-
-    labels = spark.createDataFrame([], "node long, component long")
-    waves = [[(5, 6)], [(1, 2), (3, 4)], [(2, 3)], [(9, 9)], [(4, 5)]]
-    for w in waves:
-        edges = spark.createDataFrame(w, "src long, dst long")
-        # checkpoint_truncated, not bare localCheckpoint: chained folds
-        # with carried-forward stats hang the driver (see the stats test)
-        labels = checkpoint_truncated(update_components(labels, edges))
-    got = sorted((r["node"], r["component"]) for r in labels.collect())
-    all_edges = spark.createDataFrame(
-        [e for w in waves for e in w], "src long, dst long"
-    )
-    want = sorted(
-        (r["node"], r["component"])
-        for r in connected_components(all_edges).collect()
-    )
-    assert got == want
-    assert got[0] == (1, 1) and (9, 9) in got
-
-
 def test_checkpoint_truncated_resets_cost_stats(spark):
     """Round-5 scale find: Dataset.localCheckpoint carries the child plan's
     computed sizeInBytes into the LogicalRDD leaf, and iterative operators
-    then MULTIPLY those at every join — chained incremental-CC folds grew
-    the stat to 1,662 digits after ONE fold and hung the driver inside
+    then MULTIPLY those at every join — chained label folds grew the stat
+    to 1,662 digits after ONE fold and hung the driver inside
     BigInteger.multiply by the third. checkpoint_truncated must pin the
     leaf back to the small default estimate while reusing the checkpointed
-    data (no recompute)."""
-    from pyspark.sql import functions as F
+    data (no recompute).
 
-    from capelinker_spark.operators.cluster import (
-        checkpoint_truncated,
-        update_components,
-    )
+    Each wave folds one CC result into the running label table through a
+    join, checkpointed between waves: with the bare localCheckpoint the
+    digit count grows every wave (38, 57, 76), with checkpoint_truncated
+    it stays flat (19)."""
+    from capelinker_spark.operators.cluster import checkpoint_truncated
 
     def digits(df):
         return len(
@@ -230,7 +201,16 @@ def test_checkpoint_truncated_resets_cost_stats(spark):
             [(w * 10 + i, w * 10 + i + 1) for i in range(5)],
             "src long, dst long",
         )
-        labels = checkpoint_truncated(update_components(labels, e))
+        comp = connected_components(e)
+        labels = checkpoint_truncated(
+            labels.unionByName(comp)
+            .join(
+                comp.select(F.col("node").alias("n2")),
+                F.col("node") == F.col("n2"),
+                "left",
+            )
+            .drop("n2")
+        )
         assert digits(labels) < 25, (
             f"stats grew to {digits(labels)} digits after fold {w} — "
             "originStats carried through the checkpoint again"

@@ -108,7 +108,6 @@ _UNREACHED_BY_DESIGN = {
     "capelinker_spark.ref_extract": "byte-identity oracle of test_extract.py",
     "capelinker_spark.ml.gbt": "SURVEY model-object capability",
     "capelinker_spark.ml.registry": "SURVEY model-object capability",
-    "capelinker_spark.streaming": "beyond-reference surface; open ROADMAP decision",
 }
 
 

@@ -63,6 +63,34 @@ def test_sample_to_rates_mixes_classes(spark):
     }
 
 
+def test_sample_to_rates_composes_with_streams(spark, tmp_path):
+    """The mixing rules are pure narrow filters, so they run unchanged on a
+    streaming DataFrame: stream-side sample_to_rates keeps EXACTLY the rows
+    the identical batch filter keeps — deterministic hash rule, no state,
+    no watermark."""
+    rows = [(i, "en" if i % 3 else "de") for i in range(300)]
+    schema = "doc_id long, lang string"
+    src = str(tmp_path / "mix_stream")
+    spark.createDataFrame(rows, schema).coalesce(2).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        sample_to_rates(stream, "lang", {"en": 0.3, "de": 0.8}, "doc_id")
+        .writeStream.format("memory")
+        .queryName("mix_stream_out")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {r["doc_id"] for r in spark.table("mix_stream_out").collect()}
+    batch = sample_to_rates(
+        spark.createDataFrame(rows, schema), "lang", {"en": 0.3, "de": 0.8},
+        "doc_id",
+    )
+    want = {r["doc_id"] for r in batch.collect()}
+    assert got == want and 0 < len(got) < 300
+
+
 def test_null_keys_kept_at_rate_one(spark):
     """Round-4 fix: md5(NULL) → NULL used to NULL the keep predicate and
     silently drop null-key rows even at frac=1.0. NULL keys now hash as ''

@@ -8,15 +8,24 @@ from pyspark.sql import functions as F
 from capelinker_spark.operators.packing import assign_packed_sequences
 
 
-def test_packing_matches_bruteforce(spark):
+def test_packing_matches_bruteforce(spark, tmp_path):
     counts = [50, 100, 30, 128, 1, 0, 200, 64, 64, 9]
     df = spark.createDataFrame(
         [(i, c) for i, c in enumerate(counts)], "doc_id long, n_tokens long"
     ).repartition(5)  # deliberately scrambled input layout
-    got = {
-        r["doc_id"]: (r["seq_offset"], r["seq_id"])
-        for r in assign_packed_sequences(df, "n_tokens", "doc_id", 128).collect()
-    }
+
+    def packed(**kw):
+        return {
+            r["doc_id"]: (r["seq_offset"], r["seq_id"])
+            for r in assign_packed_sequences(
+                df, "n_tokens", "doc_id", 128, **kw
+            ).collect()
+        }
+
+    got = packed()
+    # the reliable-checkpoint path packs identically
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    assert packed(reliable_checkpoint=True) == got
     off = 0
     for i, c in enumerate(counts):
         assert got[i] == (off, off // 128), (i, got[i], off)

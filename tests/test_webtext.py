@@ -444,6 +444,35 @@ class TestReviewFixesSession5:
         ).collect()
         assert row.r == "https://example.com/about.html"
 
+    @pytest.mark.parametrize(
+        "base, want",
+        [
+            ("https://a.com/d/p?x=a/b", "https://a.com/d/i.png"),
+            ("https://a.com?q=/x", "https://a.com/i.png"),
+            ("https://a.com/d/p#s/t", "https://a.com/d/i.png"),
+        ],
+    )
+    def test_resolve_href_slash_in_query_or_fragment(self, spark, base, want):
+        """A '/' in the base's query or fragment is not a path separator,
+        on the Spark column and on its DuckDB oracle mirror alike."""
+        import duckdb
+
+        from capelinker_spark.operators.webtext import (
+            resolve_href,
+            resolve_href_sql,
+        )
+
+        df = spark.createDataFrame([(base, "i.png")], "base string, h string")
+        (row,) = df.select(
+            resolve_href(F.col("base"), F.col("h")).alias("r")
+        ).collect()
+        assert row.r == want
+        (sql,) = duckdb.sql(
+            f"SELECT {resolve_href_sql('b', 'h')} FROM "
+            f"(SELECT '{base}' AS b, 'i.png' AS h)"
+        ).fetchone()
+        assert sql == want
+
     def test_unquoted_href_extracted(self, spark):
         from capelinker_spark.operators.webtext import links_from_html
 
