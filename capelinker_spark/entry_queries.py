@@ -4961,7 +4961,7 @@ def pr1_pagerank(spark, sf_dir):
     CTE rounds. Dangling mass leaks by design (uniform teleport needs a
     global-scalar barrier per iteration; documented variant). Plan per
     iteration: one edge⋈rank shuffle join + one hash agg + one node
-    left join, lineage cut with checkpoint_truncated."""
+    left join, one cluster.iterate round."""
     from capelinker_spark.operators.cluster import pagerank
 
     return pagerank(_link_graph_edges(spark, sf_dir), iterations=3)

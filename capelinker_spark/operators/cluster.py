@@ -4,13 +4,15 @@
 existing entity index; iterated across waves it is connected components.
 Here both are provided: the exact single-wave semantics as native window
 expressions, and full connected components as iterative min-label
-propagation (hash joins) with deterministic min-id tie-breaking and
-checkpointing per iteration to truncate lineage (north rule).
+propagation (hash joins) with deterministic min-id tie-breaking. Every
+iterative graph operator runs its rounds through :func:`iterate`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -45,6 +47,42 @@ def checkpoint_truncated(df: DataFrame, reliable: bool = False) -> DataFrame:
         return DataFrame(fresh, ck.sparkSession)
     except Exception:
         return ck
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    reliable: bool = False,
+    changed: Column | None = None,
+    name: str = "iterate",
+) -> DataFrame:
+    """The round loop of every iterative graph operator: ``state =
+    step(state, i)`` for ``i < rounds``, each round's ``state`` columns
+    checkpointed through :func:`checkpoint_truncated` (lineage cut per
+    round, north rule). Without ``changed`` it runs all ``rounds``.
+    ``changed`` is a boolean column of the stepped frame, counted by an
+    ``Observation`` on the checkpoint job (no extra job): the loop stops
+    after the first round counting none, and raises if the cap ``rounds``
+    passes first — a still-moving state would be a silently wrong result."""
+    cols = state.columns
+    for i in range(rounds):
+        nxt = step(state, i)
+        obs = None
+        if changed is not None:
+            obs = Observation()
+            nxt = nxt.observe(obs, F.count(F.when(changed, 1)).alias("n"))
+        # looked up as a module global each round, so a rebinding of it
+        # (a checkpoint counter) sees every round
+        state = checkpoint_truncated(nxt.select(*cols), reliable=reliable)
+        if obs is not None and obs.get["n"] == 0:
+            return state
+    if changed is not None:
+        raise RuntimeError(
+            f"{name} did not converge in {rounds} rounds — raise its cap "
+            "(rows were still changing)"
+        )
+    return state
 
 
 def expand_index(
@@ -102,8 +140,9 @@ def connected_components(
     the iteration cap. Linkage components are near-cliques, 3-6 rounds in
     practice.
 
-    Lineage per round is truncated via ``localCheckpoint`` (fast, executor-
-    local) or, with ``reliable_checkpoint=True``, via reliable
+    Rounds run through :func:`iterate`, which truncates lineage per round
+    via ``localCheckpoint`` (fast, executor-local) or, with
+    ``reliable_checkpoint=True``, via reliable
     ``checkpoint()`` to ``spark.sparkContext.getCheckpointDir()`` — use the
     latter on real clusters, where an executor loss would kill
     locally-checkpointed lineage mid-loop (set the checkpoint dir first).
@@ -111,16 +150,11 @@ def connected_components(
     Raises RuntimeError if the cap is hit while labels are still changing
     (silently-wrong components were a round-1 advice item).
     """
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # checkpoint_truncated, not bare localCheckpoint: the bare form
-        # carries compounded sizeInBytes stats into the leaf, which grow
-        # exponentially across iterations/chained calls (round-5 probe:
-        # driver minutes inside BigInteger.multiply by the 3rd fold)
-        return checkpoint_truncated(df, reliable=reliable_checkpoint)
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = _ckpt(sym)
+    sym = checkpoint_truncated(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct(),
+        reliable=reliable_checkpoint,
+    )
     # initial labels stay a LAZY view over the checkpointed sym (one
     # distinct): they are consumed only by iteration 0, whose two uses
     # share the distinct's exchange at runtime — an eager checkpoint here
@@ -131,18 +165,14 @@ def connected_components(
         .withColumn("component", F.col("node"))
     )
 
-    converged = False
-    for it in range(max_iterations):
+    def step(labels: DataFrame, it: int) -> DataFrame:
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        # carry the old label through as _old: the convergence check then
-        # reads a flag off the already-materialized checkpoint instead of
-        # re-joining new labels against old (one join + one shuffle job
-        # saved per iteration — CC overhead is per-iteration job count on
-        # the small near-clique graphs linkage produces)
+        # carry the old label through as _old, so the round's changed
+        # count is read off the stepped rows by iterate's observation
         propagated = labels.select(
             "node", F.col("component").alias("_old")
         ).join(neighbor_min, "node", "left").select(
@@ -172,24 +202,13 @@ def connected_components(
                     F.col("component"), F.coalesce(F.col("_pc"), F.col("component"))
                 ).alias("component"),
             )
-        # labels only ever decrease, so "changed" ⇔ any component < _old
-        new_labels = _ckpt(
-            propagated.select(
-                "node", "component", (F.col("component") < F.col("_old")).alias("_chg")
-            )
-        )
-        changed = new_labels.where(F.col("_chg")).limit(1).count()
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations — raise max_iterations (labels were still changing; "
-            "returning them would silently split entities)"
-        )
-    return labels
+        return propagated
+
+    # labels only ever decrease, so "changed" ⇔ component < _old
+    return iterate(
+        labels, step, max_iterations, reliable_checkpoint,
+        changed=F.col("component") < F.col("_old"), name="connected_components",
+    )
 
 
 def cluster_links(
@@ -273,8 +292,8 @@ def pagerank(
 
     Plan shape per iteration: ONE shuffle join of the (pre-checkpointed,
     outdeg-annotated) edge table against the rank table on ``src``, one
-    hash aggregation on ``dst``, one node-table left join; lineage cut
-    with ``checkpoint_truncated`` (the r5 sizeInBytes land mine). At
+    hash aggregation on ``dst``, one left join onto the rank table; each
+    iteration is one :func:`iterate` round (one checkpoint). At
     cluster scale pre-partition both tables by node id so AQE coalesces
     the per-iteration exchanges.
 
@@ -287,9 +306,6 @@ def pagerank(
     if seeds is not None and not seeds:
         raise ValueError("seeds must be None (global) or non-empty")
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return checkpoint_truncated(df, reliable=reliable_checkpoint)
-
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
@@ -297,8 +313,8 @@ def pagerank(
     )
     outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
     # outdeg rides on the edge table once, outside the loop
-    e = _ckpt(e.join(outdeg, "_s"))
-    nodes = _ckpt(
+    e = checkpoint_truncated(e.join(outdeg, "_s"), reliable=reliable_checkpoint)
+    nodes = (
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
         .distinct()
@@ -320,8 +336,16 @@ def pagerank(
             .otherwise(F.lit(0))
             .cast("long")
         )
-    ranks = nodes.withColumn("rank_scaled", init_col)
-    for _ in range(iterations):
+    num, den = int(damping_num), int(damping_den)
+    # integral `div` throughout — a double divide here would silently
+    # mis-rank past 2^53 (the j10/er7 lesson); (m % den)·num is ≤
+    # (den−1)·num so neither term can overflow LONG
+    damped = F.expr(
+        f"(_m div {den}L) * {num}L"
+        f" + ((_m % {den}L) * {num}L) div {den}L"
+    )
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         in_sum = (
             e.join(
                 ranks.select(
@@ -336,17 +360,9 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_c").alias("_m"))
         )
-        num, den = int(damping_num), int(damping_den)
-        # integral `div` throughout — a double divide here would silently
-        # mis-rank past 2^53 (the j10/er7 lesson); (m % den)·num is ≤
-        # (den−1)·num so neither term can overflow LONG
-        damped = F.expr(
-            f"(_m div {den}L) * {num}L"
-            f" + ((_m % {den}L) * {num}L) div {den}L"
-        )
-        ranks = _ckpt(
-            nodes.join(in_sum, "node", "left")
-            .select(
+        # the rank table is the node table: every node carries a rank
+        return (
+            ranks.select("node").join(in_sum, "node", "left").select(
                 "node",
                 F.coalesce(F.col("_m"), F.lit(0))
                 .cast("long")
@@ -357,6 +373,10 @@ def pagerank(
                 (jump_col + damped).alias("rank_scaled"),
             )
         )
+
+    ranks = iterate(
+        nodes.withColumn("rank_scaled", init_col), step, iterations, reliable_checkpoint
+    )
     return ranks.select(
         "node",
         "rank_scaled",
@@ -389,75 +409,63 @@ def hits(
     exactly ``scale`` each iteration. The float columns are ONE final
     IEEE division each.
 
-    Plan per iteration: two shuffle joins (edge⋈score) + two hash aggs
-    + two 1-row max aggs broadcast lazily (crossJoin of a 1-row frame —
-    the ts9/j4 lazy-scalar shape, no eager collect); lineage cut with
-    ``checkpoint_truncated``. Returns
+    Plan per half-step: one shuffle join (edge⋈score) + one hash agg +
+    one 1-row max agg broadcast lazily (crossJoin of a 1-row frame — the
+    ts9/j4 lazy-scalar shape, no eager collect); each half-step is one
+    :func:`iterate` round over the (node, hub, auth) table. Returns
     ``(node, hub_scaled, auth_scaled, hub, authority)``."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return checkpoint_truncated(df, reliable=reliable_checkpoint)
-
-    e = _ckpt(
+    e = checkpoint_truncated(
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
+        .distinct(),
+        reliable=reliable_checkpoint,
     )
-    nodes = _ckpt(
+    nodes = (
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node")))
         .distinct()
     )
 
-    def _normalized(raw: DataFrame, col: str) -> DataFrame:
-        """nodes left-joined to raw sums, max-normalized to scale."""
+    def half_step(scores: DataFrame, i: int) -> DataFrame:
+        # even rounds: authorities from hubs along s→d, odd rounds: hubs
+        # from authorities along d→s; the other score rides along
+        frm, to, by, out = ("_s", "_d", "hub_scaled", "auth_scaled")
+        if i % 2:
+            frm, to, by, out = to, frm, out, by
+        raw = (
+            e.join(scores.select(F.col("node").alias(frm), by), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(by).alias("_raw"))
+        )
         mx = raw.agg(
             F.coalesce(F.max("_raw"), F.lit(0)).cast("long").alias("_mx")
         )
         return (
-            nodes.join(raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_raw"), F.lit(0))
-                .cast("long")
-                .alias("_raw"),
-            )
+            scores.select("node", by)
+            .join(raw, "node", "left")
+            .withColumn("_raw", F.coalesce(F.col("_raw"), F.lit(0)).cast("long"))
             .crossJoin(F.broadcast(mx))
             .selectExpr(
                 "node",
+                by,
                 # mx = 0 ⇔ the graph contributed nothing this half-step
                 # (Spark's div would yield NULL, DuckDB would error)
                 "CASE WHEN _mx = 0 THEN CAST(0 AS LONG) ELSE "
                 f"(_raw div _mx) * {int(scale)}L"
-                f" + ((_raw % _mx) * {int(scale)}L) div _mx END AS {col}",
+                f" + ((_raw % _mx) * {int(scale)}L) div _mx END AS {out}",
             )
         )
 
-    # hub is the only loop-carried state (iteration i+1 reads hubs alone);
-    # joining auth inside the loop would drag an unprunable |V|⋈|V| join
-    # into every next iteration's plan — join the final auth ONCE after
-    hub = nodes.withColumn("hub_scaled", F.lit(int(scale)).cast("long"))
-    auth = None
-    for _ in range(iterations):
-        a_raw = (
-            e.join(
-                hub.select(F.col("node").alias("_s"), "hub_scaled"), "_s"
-            )
-            .groupBy(F.col("_d").alias("node"))
-            .agg(F.sum("hub_scaled").alias("_raw"))
-        )
-        auth = _ckpt(_normalized(a_raw, "auth_scaled"))
-        h_raw = (
-            e.join(
-                auth.select(F.col("node").alias("_d"), "auth_scaled"), "_d"
-            )
-            .groupBy(F.col("_s").alias("node"))
-            .agg(F.sum("auth_scaled").alias("_raw"))
-        )
-        hub = _ckpt(_normalized(h_raw, "hub_scaled"))
-    return hub.join(auth, "node").select(
+    start = nodes.select(
+        "node",
+        F.lit(int(scale)).cast("long").alias("hub_scaled"),
+        F.lit(0).cast("long").alias("auth_scaled"),  # round 0 overwrites it
+    )
+    scores = iterate(start, half_step, 2 * iterations, reliable_checkpoint)
+    return scores.select(
         "node",
         "hub_scaled",
         "auth_scaled",
@@ -493,32 +501,31 @@ def label_propagation(
     set is the edge endpoints, so every node has ≥1 neighbour and each
     round relabels every node. Plan per round: one shuffle join of the
     symmetrized edge table against labels, one (node, label) hash
-    count, one keyed argmax window on the SAME node partitioning;
-    lineage cut with ``checkpoint_truncated``. Returns
+    count, one keyed argmax window on the SAME node partitioning; each
+    round is one :func:`iterate` round. Returns
     ``(node, label)``."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return checkpoint_truncated(df, reliable=reliable_checkpoint)
 
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a").isNotNull()
         & F.col("b").isNotNull()
         & (F.col("a") != F.col("b"))
     )
-    sym = _ckpt(
+    sym = checkpoint_truncated(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
+        .distinct(),
+        reliable=reliable_checkpoint,
     )
+    # initial labels stay lazy, as in connected_components
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    labels = _ckpt(labels)
     w = Window.partitionBy("node").orderBy(
         F.col("_c").desc(), F.col("label").asc()
     )
-    for _ in range(rounds):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         counts = (
             sym.join(
                 labels.select(F.col("node").alias("b"), "label"), "b"
@@ -526,9 +533,10 @@ def label_propagation(
             .groupBy(F.col("a").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
-        labels = _ckpt(
+        return (
             counts.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("node", "label")
         )
-    return labels
+
+    return iterate(labels, step, rounds, reliable_checkpoint)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from capelinker_spark.operators.cluster import iterate
+
 __all__ = [
     "blocking_metrics",
     "pairwise_cluster_metrics",
@@ -870,37 +872,25 @@ def ktruss(
     surviving subgraph, drop edges with support < k−2, repeat until no
     edge falls (dropping an edge can demote its neighbours, so one pass
     is NOT enough — the cascade is the algorithm). Each wave is the
-    bounded triangle pipeline (degree-ordered, no cartesian) and ONE
-    driver-side count; iterates are cut with
-    ``cluster.checkpoint_truncated`` — plain per-iteration checkpoints
-    compound cost-model stats exponentially (the round-5 BigInteger
-    freeze) and unbroken lineage grows a plan per wave.
+    bounded triangle pipeline (degree-ordered, no cartesian) and one
+    ``cluster.iterate`` round: the edges left below k−2 support are
+    counted on the wave's checkpoint, and a wave that leaves none is the
+    fixpoint.
 
     Returns the surviving normalized edges ``(src, dst, support)`` with
     the FINAL in-truss support values. k < 3 returns the (normalized)
     input with its supports (every edge trivially qualifies).
     Terminates in ≤ |E| waves; ``max_iter`` is a guard rail."""
-    from capelinker_spark.operators.cluster import checkpoint_truncated
-
     if k < 2:
         raise ValueError("k must be >= 2")
     e = edge_triangle_support(edges, src, dst)
     if k < 3:
         return e
-    n = e.count()
-    for _ in range(max_iter):
-        e = checkpoint_truncated(
-            edge_triangle_support(
-                e.where(F.col("support") >= k - 2), src, dst
-            )
-        )
-        m = e.where(F.col("support") >= k - 2).count()
-        if m == n:
-            break
-        n = m
-    else:
-        raise RuntimeError(f"ktruss did not converge in {max_iter} waves")
-    return e.where(F.col("support") >= k - 2)
+    keep = F.col("support") >= k - 2
+    return iterate(
+        e, lambda e, _: edge_triangle_support(e.where(keep), src, dst), max_iter,
+        changed=~keep, name="ktruss",
+    )
 
 
 def link_prediction_scores(

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from capelinker_spark.operators.cluster import iterate
+
 
 def _avg_rank(score: Column, by: Column) -> Column:
     w = Window.partitionBy(by).orderBy(F.desc_nulls_last(score))
@@ -213,60 +215,40 @@ def greedy_match(
     (priority = score DESC, then id_from ASC, id_to ASC — a TOTAL order,
     so the result is deterministic and equals the sequential greedy
     matching), then drops all edges incident to newly matched nodes.
-    Rounds needed ~ O(log E) in practice; each round is two windows
-    (one per endpoint role) + two anti-joins — fully distributed, no
-    driver-side pair data beyond an emptiness probe per round.
+    Rounds needed ~ O(log E) in practice; each round is four windows
+    (rank and matched-endpoint flag per endpoint role) over the edges
+    still in play — fully distributed, no driver-side pair data.
 
-    The iteration checkpoints through ``cluster.checkpoint_truncated``
-    (lineage AND cost-stat truncation — the r5 exponential-sizeInBytes
-    land mine applies to any iterative fold loop, this one included).
+    Rounds run through ``cluster.iterate`` until no edge is open; edges
+    still open after ``max_iter`` rounds raise rather than return a
+    silently PARTIAL matching (the sequential-greedy contract).
 
     Returns the matched ``(id_from, id_to, score_col)`` edges."""
-    from capelinker_spark.operators.cluster import checkpoint_truncated
+    cols = [id_from, id_to, score_col]
+    prio = [F.desc(score_col), F.asc(id_from), F.asc(id_to)]
+    by_from, by_to = Window.partitionBy(id_from), Window.partitionBy(id_to)
 
-    rem = pairs.select(id_from, id_to, score_col)
-    out = None
-    for _ in range(max_iter):
-        if rem.isEmpty():
-            break
-        prio = [F.desc(score_col), F.asc(id_from), F.asc(id_to)]
-        wf = Window.partitionBy(id_from).orderBy(*prio)
-        wt = Window.partitionBy(id_to).orderBy(*prio)
-        flagged = rem.withColumn("_rf", F.row_number().over(wf)).withColumn(
-            "_rt", F.row_number().over(wt)
+    def step(state: DataFrame, _: int) -> DataFrame:
+        rem = state.where(~F.col("_m")).withColumn(
+            "_d",
+            (F.row_number().over(by_from.orderBy(*prio)) == 1)
+            & (F.row_number().over(by_to.orderBy(*prio)) == 1),
         )
-        dom = flagged.where(
-            (F.col("_rf") == 1) & (F.col("_rt") == 1)
-        ).select(id_from, id_to, score_col)
-        dom = checkpoint_truncated(dom)
-        out = dom if out is None else out.unionByName(dom)
         # bipartite removal: the two id columns are DIFFERENT record
         # namespaces (left file / right file), so a matched left id only
         # blocks further edges on the left side, and vice versa
-        rem = (
-            flagged.where((F.col("_rf") > 1) | (F.col("_rt") > 1))
-            .select(id_from, id_to, score_col)
-            .join(dom.select(id_from), id_from, "left_anti")
-            .join(dom.select(id_to), id_to, "left_anti")
-            .select(id_from, id_to, score_col)
+        hit = F.max("_d").over(by_from) | F.max("_d").over(by_to)
+        return state.where(F.col("_m")).unionByName(
+            rem.withColumn("_hit", hit)
+            .where(F.col("_d") | ~F.col("_hit"))
+            .select(*cols, F.col("_d").alias("_m"))
         )
-        rem = checkpoint_truncated(rem)
-    else:
-        # the loop ran out of iterations with edges remaining: returning
-        # `out` here would be a silently PARTIAL matching, violating the
-        # documented equals-sequential-greedy contract — fail loudly
-        # instead, mirroring connected_components' convergence guard
-        # (round-6 advice item)
-        if not rem.isEmpty():
-            raise RuntimeError(
-                f"greedy_match did not drain the candidate pool in "
-                f"{max_iter} iterations — raise max_iter (edges remain; "
-                "returning a partial matching would silently violate the "
-                "sequential-greedy contract)"
-            )
-    if out is None:
-        return pairs.select(id_from, id_to, score_col).limit(0)
-    return out
+
+    state = iterate(
+        pairs.select(*cols, F.lit(False).alias("_m")), step, max_iter,
+        changed=~F.col("_m"), name="greedy_match",
+    )
+    return state.where(F.col("_m")).select(*cols)
 
 
 def pr_sweep(

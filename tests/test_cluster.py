@@ -96,8 +96,55 @@ def test_connected_components_raises_on_cap(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(80)], "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
         connected_components(edges, max_iterations=2)
+
+    # a 5-node path needs 4 rounds (3 that move labels, 1 that moves none):
+    # a cap of exactly 4 returns the generous cap's labels, 3 raises
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 5)], "src long, dst long"
+    )
+    want = sorted(connected_components(path, max_iterations=50).collect())
+    assert sorted(connected_components(path, max_iterations=4).collect()) == want
+    with pytest.raises(
+        RuntimeError, match="connected_components did not converge in 3 rounds"
+    ):
+        connected_components(path, max_iterations=3)
+
+
+def test_iterative_operators_run_no_probe_action(spark, monkeypatch):
+    """Fixpoint loops read convergence off each round's checkpoint (an
+    Observation), so building CC, greedy_match and ktruss runs no count,
+    isEmpty or collect; the results are then collected outside."""
+    from capelinker_spark.operators.cluster import connected_components
+    from capelinker_spark.operators.er_eval import ktruss
+    from capelinker_spark.operators.predict import greedy_match
+
+    tri_chain = [(i, i + 1) for i in range(6)] + [(i, i + 2) for i in range(5)]
+    edges = spark.createDataFrame(tri_chain, "src long, dst long")
+    und = edges.toDF("id_from", "id_to")
+    pairs = spark.createDataFrame(
+        [(1, 10, 0.9), (1, 11, 0.8), (2, 11, 0.7), (2, 12, 0.6), (3, 12, 0.5)],
+        "id_from long, id_to long, predicted double",
+    )
+
+    def probe(*a, **kw):
+        raise AssertionError("probe action while building an iterative result")
+
+    with monkeypatch.context() as m:
+        for name in ("count", "isEmpty", "collect"):
+            m.setattr(type(edges), name, probe)
+        cc = connected_components(edges)
+        gm = greedy_match(pairs)
+        t4 = ktruss(und, 4)
+    assert {(r["node"], r["component"]) for r in cc.collect()} == {
+        (n, 0) for n in range(7)
+    }
+    # three rounds: (1,10), then (2,11), then (3,12)
+    assert {(r["id_from"], r["id_to"]) for r in gm.collect()} == {
+        (1, 10), (2, 11), (3, 12)
+    }
+    assert t4.collect() == []  # a chain of triangles has no 4-truss
 
 
 def test_expand_index_null_candidates_untouched_and_split(spark):

@@ -487,6 +487,11 @@ def test_ktruss_peel_and_cascade(spark):
     tri_chain = [(i, i + 1) for i in range(6)] + [(i, i + 2) for i in range(5)]
     tc = spark.createDataFrame(tri_chain, "id_from long, id_to long")
     assert ktruss(tc, 4).count() == 0
+    # it takes two waves (wave 1 leaves edges below support 2, wave 2
+    # none): a cap of exactly 2 gives the same truss, a cap of 1 raises
+    assert ktruss(tc, 4, max_iter=2).count() == 0
+    with pytest.raises(RuntimeError, match="ktruss did not converge in 1 rounds"):
+        ktruss(tc, 4, max_iter=1)
     with pytest.raises(ValueError):
         ktruss(df, 1)
 

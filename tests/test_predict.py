@@ -139,9 +139,8 @@ def test_greedy_match_empty_and_conflict(spark):
 
 
 def test_greedy_match_raises_on_iteration_exhaustion(spark):
-    """max_iter exhausted with edges remaining must RAISE, not return a
-    silently partial matching (round-6 advice item: mirror the
-    connected_components convergence guard)."""
+    """max_iter exhausted with edges remaining must RAISE through the
+    shared iterate() cap guard, not return a silently partial matching."""
     import pytest
 
     from capelinker_spark.operators.predict import greedy_match
@@ -151,14 +150,18 @@ def test_greedy_match_raises_on_iteration_exhaustion(spark):
         [(1, 1, 0.9), (2, 1, 0.8), (2, 2, 0.7)],
         "id_from long, id_to long, predicted double",
     )
-    with pytest.raises(RuntimeError, match="greedy_match did not drain"):
+    with pytest.raises(
+        RuntimeError, match="greedy_match did not converge in 1 rounds"
+    ):
         greedy_match(chain, max_iter=1).collect()
-    # with enough iterations the same pool drains fine
-    got = {
-        (r["id_from"], r["id_to"])
-        for r in greedy_match(chain, max_iter=3).collect()
-    }
-    assert got == {(1, 1), (2, 2)}
+    # a cap of exactly the two rounds needed drains the pool like a
+    # generous one
+    for cap in (2, 50):
+        got = {
+            (r["id_from"], r["id_to"])
+            for r in greedy_match(chain, max_iter=cap).collect()
+        }
+        assert got == {(1, 1), (2, 2)}
 
 
 def test_mutual_best_match_hand_computed(spark):

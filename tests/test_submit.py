@@ -118,3 +118,54 @@ def test_spark_submit_curation(spark, tmp_path):
     assert summary["kept"] == 20          # bad.net's threshold 1.1 drops all
     assert summary["sequences"] >= 1
     assert os.path.exists(str(tmp_path / "wd" / "_lineage.jsonl"))
+
+
+def test_ensure_workers_importable_ships_one_private_zip(tmp_path, monkeypatch):
+    """Each process builds its package zip once, in a private temp directory
+    that is gone after the process exits; a package imported from a zip
+    (not a directory) ships nothing; an empty package raises instead of
+    writing an empty zip."""
+    import sys
+    import types
+
+    import capelinker_spark
+    from capelinker_spark import util
+
+    code = (
+        "import types\n"
+        "from capelinker_spark import util\n"
+        "added = []\n"
+        "sc = types.SimpleNamespace(addPyFile=added.append)\n"
+        "spark = types.SimpleNamespace(sparkContext=sc)\n"
+        "util.ensure_workers_importable(spark)\n"
+        "util.ensure_workers_importable(spark)\n"
+        "import os, zipfile\n"
+        "assert len(added) == 1 and os.path.isfile(added[0])\n"
+        "assert 'capelinker_spark/functions/_strdistc.c' in "
+        "zipfile.ZipFile(added[0]).namelist()\n"
+        "print(added[0])\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=REPO, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    zpath = proc.stdout.strip().splitlines()[-1]
+    assert not os.path.exists(os.path.dirname(zpath))  # removed at exit
+
+    added = []
+    fake = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(addPyFile=added.append)
+    )
+    zipped = str(tmp_path / "deps.zip" / "capelinker_spark" / "__init__.py")
+    monkeypatch.setattr(capelinker_spark, "__file__", zipped)
+    monkeypatch.setattr(util, "_ADDED", set())  # keep the fake's id out
+    util.ensure_workers_importable(fake)
+    assert added == []
+
+    empty = tmp_path / "pkg" / "capelinker_spark"
+    empty.mkdir(parents=True)
+    monkeypatch.setattr(capelinker_spark, "__file__", str(empty / "__init__.py"))
+    with pytest.raises(RuntimeError, match="no package sources"):
+        util.build_pyfiles_zip(str(tmp_path / "out.zip"))
+    assert not os.path.exists(tmp_path / "out.zip")
