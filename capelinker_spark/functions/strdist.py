@@ -347,7 +347,3 @@ def gk(x1: Column, x2: Column, sigma: float = 1.0) -> Column:
     """Gaussian similarity kernel as a native expression (``R/util.R:271-273``)."""
     return F.exp(-F.abs(x1 - x2) / F.lit(float(sigma) ** 2))
 
-
-def levenshtein_dist(a: Column, b: Column) -> Column:
-    """Plain Levenshtein (native). The built-in approximation of OSA."""
-    return F.levenshtein(a, b).cast("double")

@@ -23,10 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def soundex_key(col: Column) -> Column:
-    return F.soundex(col)
-
-
 def first_letter_key(col: Column) -> Column:
     return F.substring(col, 1, 1)
 
@@ -110,12 +106,6 @@ def auto_salt_count(
     )
     m = row["_m"] or 0
     return max(1, min(max_salt, math.ceil(m / target_pairs)))
-
-
-def block_stats(pairs: DataFrame, key_col: str) -> DataFrame:
-    """Per-block lineage metrics: pair count per blocking key (feeds the
-    qa.lineage rows; also the input to choosing a salt count)."""
-    return pairs.groupBy(key_col).agg(F.count("*").alias("pair_count"))
 
 
 def sorted_neighborhood_pairs(

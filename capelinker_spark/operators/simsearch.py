@@ -72,16 +72,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit LSH bucket key from ``len(planes)`` random hyperplanes —
-    a '0'/'1' string. Planes are literal arrays (broadcast by the plan)."""
-    bits = [
-        F.when(dot(vec, _lit_vec(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
 def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).normal(size=(n_planes, dim))
 
@@ -164,12 +154,20 @@ def train_ivf_centroids(
     )
     rng = np.random.default_rng(seed)
     idx = rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)
-    cents = sample[idx].copy()
+    return _lloyd(sample, sample[idx], iterations)
+
+
+def _lloyd(points: np.ndarray, init_centroids: np.ndarray, iterations: int) -> np.ndarray:
+    """``iterations`` Lloyd (k-means) rounds from ``init_centroids``
+    (copied): assign each point to its nearest centroid by squared L2,
+    then move each centroid that won points to their mean; a centroid
+    that won none stays put."""
+    cents = init_centroids.copy()
     for _ in range(iterations):
-        d = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+        d = ((points[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
         assign = d.argmin(1)
         for c in range(len(cents)):
-            members = sample[assign == c]
+            members = points[assign == c]
             if len(members):
                 cents[c] = members.mean(0)
     return cents
@@ -382,14 +380,7 @@ def train_pq_codebooks(
     for j in range(m):
         sub = sample[:, j * d:(j + 1) * d]
         idx = rng.choice(len(sub), size=min(k, len(sub)), replace=False)
-        cents = sub[idx].copy()
-        for _ in range(iterations):
-            dist = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-            assign = dist.argmin(1)
-            for c in range(len(cents)):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(0)
+        cents = _lloyd(sub, sub[idx], iterations)
         books[j, : len(cents)] = cents
         if len(cents) < k:
             books[j, len(cents):] = cents[-1]

@@ -23,13 +23,6 @@ def _stopword_hits(col: Column, words: list[str]) -> Column:
     return F.regexp_count(F.lower(col), F.lit(pattern))
 
 
-def lang_scores(col: Column) -> list[Column]:
-    return [
-        _stopword_hits(col, ws).alias(f"score_{lang}")
-        for lang, ws in LANG_STOPWORDS.items()
-    ]
-
-
 def detect_language(col: Column) -> Column:
     """argmax of stopword-hit counts; ties and zero-hit texts → 'und'
     (undetermined). Deterministic: tie goes to the alphabetically-first

@@ -232,10 +232,6 @@ def url_host(col: Column) -> Column:
     return F.lower(F.regexp_extract(col, _HOST_OF_URL_RE, 1))
 
 
-def url_host_sql(c: str) -> str:
-    return f"lower(regexp_extract({c}, '{_HOST_OF_URL_RE}', 1))"
-
-
 def links_from_html(
     df: DataFrame,
     html_col: str = "html",

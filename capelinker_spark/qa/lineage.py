@@ -1,6 +1,8 @@
 """Per-stage lineage & metrics rows (north rule: every checkpoint carries
 blocking key, pair count, score histogram, elapsed time so a resumed run can
-be audited per partition/stage)."""
+be audited per partition/stage). The row count and score histogram arrive
+ready-made from the Observation on the stage write
+(:mod:`capelinker_spark.stage_runner`); this module only stores them."""
 
 from __future__ import annotations
 
@@ -10,24 +12,6 @@ import time
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def score_histogram(df: DataFrame, score_col: str, bins: int = 10) -> list[dict]:
-    """Decile histogram of a score column, one aggregation."""
-    if score_col not in df.columns:
-        return []
-    bucket = F.least(
-        F.floor(F.col(score_col) * bins).cast("int"), F.lit(bins - 1)
-    )
-    rows = (
-        df.where(F.col(score_col).isNotNull())
-        .groupBy(bucket.alias("bucket"))
-        .count()
-        .orderBy("bucket")
-        .collect()
-    )
-    return [{"bucket": r["bucket"], "count": r["count"]} for r in rows]
 
 
 class LineageLog:

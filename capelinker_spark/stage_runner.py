@@ -2,6 +2,10 @@
 curation): parquet stage dirs with a ``_manifest.json`` next to Spark's
 _SUCCESS carrying {stage, config_hash, schema, row_count}.
 
+The stage write is the only pass that counts: one ``Observation`` on it
+yields the row count (manifest and lineage) and, for scored stages, the
+decile score histogram, so bookkeeping runs no count or histogram job.
+
 ``config_hash`` CHAINS — a stage's hash covers its OWN config fields plus
 its upstream stage's hash — so changing an early-stage parameter
 invalidates that stage AND everything downstream, while a late-stage
@@ -18,10 +22,14 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from capelinker_spark.qa.lineage import LineageLog, score_histogram
+from capelinker_spark.qa.lineage import LineageLog
+
+# score histogram: bucket = least(floor(score * _BINS), _BINS - 1), so a
+# probability of 1.0 lands in the top bucket and a NULL score in none
+_BINS = 10
 
 
 class StageRunner:
@@ -103,9 +111,23 @@ class StageRunner:
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = fn()
-        df.write.mode("overwrite").parquet(path)
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("n")]
+        scored = bool(score_col) and score_col in df.columns
+        if scored:
+            score = F.col(score_col)
+            bucket = F.least(F.floor(score * _BINS).cast("int"), F.lit(_BINS - 1))
+            metrics += [
+                F.count_if(score.isNotNull() & (bucket == b)).alias(f"b{b}")
+                for b in range(_BINS)
+            ]
+        # observed last, so its metrics come from the write's result stage
+        # (a retried map stage cannot count rows twice)
+        df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
+        m = obs.get
+        n = m["n"]
+        # re-read: truncates lineage, supplies the manifest schema
         out = self.spark.read.parquet(path)
-        n = out.count()
         with open(self._manifest_path(stage), "w") as fh:
             json.dump(
                 {
@@ -117,8 +139,11 @@ class StageRunner:
                 fh,
             )
         extra = {}
-        if score_col and score_col in out.columns:
-            extra["score_histogram"] = score_histogram(out, score_col)
+        if scored:
+            extra["score_histogram"] = [
+                {"bucket": b, "count": m[f"b{b}"]}
+                for b in range(_BINS) if m[f"b{b}"]
+            ]
         km = None
         if key_metrics_col and key_metrics_col in out.columns:
             km = out.groupBy(key_metrics_col).agg(F.count("*").alias("pair_count"))

@@ -200,6 +200,28 @@ def test_curation_pipeline_kill_and_resume(spark, tmp_path):
         e["stage"] == "scored" and e.get("score_histogram") for e in entries
     )
 
+    # the observed write: each stage's manifest and last lineage row count
+    # what a fresh read counts; the scored histogram equals a groupBy over
+    # quality_prob; the mixed key metrics hold one pair_count per language
+    last = {e["stage"]: e for e in entries}
+    for s in ("cleaned", "deduped", "scored", "mixed", "packed"):
+        with open(os.path.join(wd, s, "_manifest.json")) as fh:
+            n = _json.load(fh)["row_count"]
+        assert n == last[s]["row_count"] == spark.read.parquet(
+            os.path.join(wd, s)).count(), s
+    scored = spark.read.parquet(os.path.join(wd, "scored"))
+    q = F.col("quality_prob")
+    bucket = F.least(F.floor(q * 10).cast("int"), F.lit(9))
+    ref = scored.where(q.isNotNull()).groupBy(bucket.alias("bucket")).count()
+    assert last["scored"]["score_histogram"] == [
+        {"bucket": r["bucket"], "count": r["count"]}
+        for r in ref.orderBy("bucket").collect()
+    ]
+    km = spark.read.parquet(os.path.join(wd, "_lineage", "mixed"))
+    mixed = spark.read.parquet(os.path.join(wd, "mixed"))
+    assert sorted(map(tuple, km.collect())) == sorted(
+        map(tuple, mixed.groupBy("lang").count().collect()))
+
 
 def test_curation_hash_covers_lang_col_and_dict_order(spark, tmp_path):
     """Pass-2 review findings: renaming lang_col must invalidate every

@@ -139,6 +139,39 @@ def test_lineage_written(workdir):
     assert len(scores_entry.get("score_histogram", [])) > 0
 
 
+def _histogram_reference(df, score_col):
+    """The decile histogram by a groupBy, as the lineage row lists it."""
+    bucket = F.least(F.floor(F.col(score_col) * 10).cast("int"), F.lit(9))
+    rows = (
+        df.where(F.col(score_col).isNotNull())
+        .groupBy(bucket.alias("bucket")).count().orderBy("bucket").collect()
+    )
+    return [{"bucket": r["bucket"], "count": r["count"]} for r in rows]
+
+
+def test_observed_counts_match_the_checkpoints(spark, workdir, result):
+    """Every stage's manifest ``row_count`` (taken off the observed write)
+    equals a fresh count of its parquet, and the scored stages' lineage
+    histograms equal a groupBy over the written scores."""
+    import json
+    import os
+
+    stages = [d for d in sorted(os.listdir(workdir))
+              if os.path.exists(f"{workdir}/{d}/_manifest.json")]
+    assert {"records", "candidates", "features", "scores", "links",
+            "clusters"} <= set(stages)
+    for stage in stages:
+        with open(f"{workdir}/{stage}/_manifest.json") as fh:
+            m = json.load(fh)
+        assert m["row_count"] == spark.read.parquet(f"{workdir}/{stage}").count(), stage
+    last = {e["stage"]: e for e in LineagePath(workdir).entries()}
+    for stage in ("scores", "links"):
+        got = last[stage]["score_histogram"]
+        assert got and got == _histogram_reference(
+            spark.read.parquet(f"{workdir}/{stage}"), "predicted"
+        ), stage
+
+
 def test_kill_and_resume(spark, pages, truth, workdir, result):
     """Simulate a mid-run failure: delete the outputs of the last three
     stages, rerun with resume=True — identical final clusters, and the
@@ -249,3 +282,71 @@ def test_truthless_resume_with_stale_model_fails_loudly(spark, pages, tmp_path):
     pipe = LinkagePipeline(spark, wd, PipelineConfig())
     with pytest.raises(ValueError, match="does not match this config"):
         pipe.run(pages, truth=None, resume=True)
+
+
+def _runner(spark, wd):
+    """A bare StageRunner over a one-field config."""
+    from types import SimpleNamespace
+
+    from capelinker_spark.stage_runner import StageRunner
+
+    r = StageRunner()
+    r._init_runner(spark, wd, SimpleNamespace(v=1))
+    return r
+
+
+def test_stage_bookkeeping_runs_no_count_or_histogram_job(spark, tmp_path, monkeypatch):
+    """The stage write is the only pass that counts: while a scored stage
+    runs ``_stage``, count/collect raise, yet the manifest row count and
+    the lineage histogram come out equal to a count and a groupBy
+    reference (scores on bucket edges, 1.0 clamped into the top bucket,
+    NULL in none)."""
+    import json
+
+    wd = str(tmp_path / "wd")
+    runner = _runner(spark, wd)
+    vals = [0.0, 0.1, 0.1, 0.95, 1.0, None, 0.55, 0.999, None, 0.0]
+    src = spark.createDataFrame(
+        list(enumerate(vals)), "id long, score double"
+    ).repartition(3)
+
+    def probe(*a, **kw):
+        raise AssertionError("count/collect job in stage bookkeeping")
+
+    with monkeypatch.context() as m:
+        for name in ("count", "collect"):
+            m.setattr(type(src), name, probe)
+        out = runner._stage("scored", lambda: src, resume=False, score_col="score")
+    with open(f"{wd}/scored/_manifest.json") as fh:
+        assert json.load(fh)["row_count"] == out.count() == len(vals)
+    (entry,) = runner.lineage.entries()
+    assert entry["row_count"] == len(vals)
+    assert entry["score_histogram"] == _histogram_reference(out, "score") == [
+        {"bucket": 0, "count": 2}, {"bucket": 1, "count": 2},
+        {"bucket": 5, "count": 1}, {"bucket": 9, "count": 3},
+    ]
+
+
+def test_empty_stage_records_zero_and_resumes(spark, tmp_path):
+    """A 0-row stage still fires its Observation: row count 0 and an
+    empty histogram in the lineage, manifest row_count 0, and a resume
+    trusts it through ``_done`` without recomputing."""
+    import json
+
+    wd = str(tmp_path / "wd")
+    runner = _runner(spark, wd)
+    empty = spark.createDataFrame([(1, 0.5)], "id long, score double").where(
+        F.col("id") < 0
+    )
+    runner._stage("scored", lambda: empty, resume=False, score_col="score")
+    with open(f"{wd}/scored/_manifest.json") as fh:
+        assert json.load(fh)["row_count"] == 0
+    (entry,) = runner.lineage.entries()
+    assert entry["row_count"] == 0 and entry["score_histogram"] == []
+
+    def recompute():
+        raise AssertionError("a valid 0-row checkpoint was recomputed")
+
+    assert runner._done("scored")
+    again = runner._stage("scored", recompute, resume=True, score_col="score")
+    assert again.count() == 0 and len(runner.lineage.entries()) == 1

@@ -250,3 +250,42 @@ def test_ivfpq_topk_composition(spark, emb, emb_np):
     assert "ivf_cell" in pplan
     assert "Cartesian" not in pplan and "crossJoin" not in pplan
     assert "BatchEvalPython" not in pplan and "ArrowEvalPython" not in pplan
+
+
+def test_ivf_and_pq_training_unchanged_by_shared_lloyd(spark, emb_np):
+    """IVF and PQ training share one Lloyd helper; both return exactly
+    the arrays of their former inline loops (same seeded draws, PQ's one
+    rng shared across sub-spaces) — the reference loop is kept here."""
+    _, vecs = emb_np
+    sample = vecs[:400]
+    corpus = spark.createDataFrame(
+        [(v.tolist(),) for v in sample], "embedding array<double>"
+    )
+
+    def inline_lloyd(pts, idx, iterations=10):
+        cents = pts[idx].copy()
+        for _ in range(iterations):
+            d = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+            assign = d.argmin(1)
+            for c in range(len(cents)):
+                members = pts[assign == c]
+                if len(members):
+                    cents[c] = members.mean(0)
+        return cents
+
+    rng = np.random.default_rng(42)
+    ivf = inline_lloyd(sample, rng.choice(len(sample), size=8, replace=False))
+    assert np.array_equal(
+        S.train_ivf_centroids(corpus, n_centroids=8, sample_size=400), ivf
+    )
+
+    dim, m, k = sample.shape[1], 16, 64
+    d = dim // m
+    rng = np.random.default_rng(42)
+    books = np.empty((m, k, d))
+    for j in range(m):
+        sub = sample[:, j * d:(j + 1) * d]
+        books[j] = inline_lloyd(sub, rng.choice(len(sub), size=k, replace=False))
+    assert np.array_equal(
+        S.train_pq_codebooks(corpus, dim=dim, m=m, k=k, sample_size=400), books
+    )
