@@ -1792,7 +1792,7 @@ _BIGRAM_COUNTS_SQL = (
 # cosine from exact integer dot & norms² — the ONE float expression shape both
 # engines compute on identical integer inputs (IEEE sqrt/mul/div are correctly
 # rounded ⇒ bit-identical result, no rounding needed anywhere)
-_COS_SQL = "{dot}::DOUBLE / (sqrt({n2a}::DOUBLE) * sqrt({n2b}::DOUBLE))"
+_COS_INT_SQL = "{dot}::DOUBLE / (sqrt({n2a}::DOUBLE) * sqrt({n2b}::DOUBLE))"
 
 
 @register(
@@ -1803,8 +1803,8 @@ _COS_SQL = "{dot}::DOUBLE / (sqrt({n2a}::DOUBLE) * sqrt({n2b}::DOUBLE))"
         na AS (SELECT w, sum(cnt*cnt) AS n2 FROM ga GROUP BY w),
         nb AS (SELECT w, sum(cnt*cnt) AS n2 FROM gb GROUP BY w),
         sims AS (SELECT ga.w AS word_a, gb.w AS word_b,
-                        {_COS_SQL.format(dot='sum(ga.cnt * gb.cnt)',
-                                         n2a='na.n2', n2b='nb.n2')} AS sim
+                        {_COS_INT_SQL.format(dot='sum(ga.cnt * gb.cnt)',
+                                             n2a='na.n2', n2b='nb.n2')} AS sim
                  FROM ga JOIN gb ON ga.bg = gb.bg
                  JOIN na ON na.w = ga.w JOIN nb ON nb.w = gb.w
                  GROUP BY ga.w, gb.w, na.n2, nb.n2)
@@ -1855,8 +1855,8 @@ def j3b_bigram_cosine_join(spark, sf_dir):
         na AS (SELECT w, sum(cnt*cnt) AS n2 FROM gaw GROUP BY w),
         nb AS (SELECT w, sum(cnt*cnt) AS n2 FROM gbw GROUP BY w),
         sims AS (SELECT gaw.w AS word_a, gbw.w AS word_b,
-                        {_COS_SQL.format(dot='sum(gaw.cnt * gbw.cnt)',
-                                         n2a='na.n2', n2b='nb.n2')} AS sim
+                        {_COS_INT_SQL.format(dot='sum(gaw.cnt * gbw.cnt)',
+                                             n2a='na.n2', n2b='nb.n2')} AS sim
                  FROM gaw JOIN gbw ON gaw.bg = gbw.bg
                  JOIN na ON na.w = gaw.w JOIN nb ON nb.w = gbw.w
                  GROUP BY gaw.w, gbw.w, na.n2, nb.n2)
@@ -1867,8 +1867,8 @@ def j4_idf_bigram_cosine_join(spark, sf_dir):
     """J4: idf-weighted bigram-cosine blocking (jMatrix axes analog,
     R/candidates.R:97-112), the reference's default-adjacent blocktype.
     idf = ln(N/df) over the union of both sides' distinct strings, quantized
-    floor(idf·1e6+.5) to LONGS (the log runs in CPython — bit-identical to
-    DuckDB's ln, unlike JVM Math.log) so dot/norms² stay exact integers and
+    floor(idf·1e6+.5) to LONGS (the log is functions/libm.py's — bit-identical
+    to DuckDB's ln, unlike JVM Math.log) so dot/norms² stay exact integers and
     the final cosine is the same single IEEE expression on both engines."""
     from capelinker_spark.operators.candidates import candidates
 
@@ -3397,8 +3397,8 @@ def ir1_bm25_topk(spark, sf_dir):
     of the ANN family: three literal queries ranked over the documents
     corpus, inverted-index shape (one postings shuffle, broadcast query
     terms, per-query top-k window). Oracle-exact tier: Robertson idf
-    quantized to longs with a CPython log (the j4 convention — JVM
-    Math.log is 1 ulp off DuckDB's libm ln), per-term contributions
+    quantized to longs with the functions/libm.py log (the j4
+    convention), per-term contributions
     rounded and accumulated as DECIMAL(38,6) so the score sum is
     order-independent under any partitioning."""
     from capelinker_spark.operators.ir import bm25_topk
@@ -4139,10 +4139,9 @@ def fs2_tf_weights(spark, sf_dir):
     (fellegi_sunter.term_frequency_weights) over part types — the
     value-specific refinement of the flat Fellegi-Sunter u-probability
     (rare-value agreement outweighs common-value agreement). Counts are
-    exact longs; ONE IEEE division feeds log₂ evaluated in CPython libm
-    on the Spark side and DuckDB libm on the oracle side, with
-    round(...,6) absorbing any last-ulp divergence (the m1 sigmoid
-    convention)."""
+    exact longs; ONE IEEE division feeds log₂ evaluated in libm on both
+    sides (functions/libm.py for Spark), with round(...,6) absorbing any
+    last-ulp divergence (the m1 sigmoid convention)."""
     from capelinker_spark.ml.fellegi_sunter import term_frequency_weights
 
     part = _t(spark, sf_dir, "part")
@@ -5907,8 +5906,8 @@ def qa1_psi_drift(spark, sf_dir):
     = odd-id documents with a planted +60-char length shift, so the
     report shows genuine bucket-level drift. Laplace-smoothed integer
     counts (empty buckets well-defined, no float ε), per-bucket term
-    computed in CPython libm over the ≤21-row bucket table (the
-    ir1/fs2 bounded-Arrow recipe — bit-identical to DuckDB's ln), the
+    computed around the functions/libm.py log over the ≤21-row bucket
+    table (bit-identical to DuckDB's ln), the
     distributed work two combinable hash aggs. Per-bucket terms kept
     (drift LOCATION, not just the scalar)."""
     from capelinker_spark.qa.preflight import psi_drift
@@ -5976,7 +5975,7 @@ def dm5_weighted_sample(spark, sf_dir):
     drawn with probability proportional to length (w = n_chars; in
     production w is a quality or DSIR importance score). Oracle tier:
     u = (md5-10-hex + 1)/2^40 (power-of-two division, IEEE-exact),
-    priority ln(u)/w computed by CPython libm (bit-identical to
+    priority ln(u)/w with the functions/libm.py log (bit-identical to
     DuckDB's ln — the ir1 precedent) kept as a FULL-PRECISION double
     (a quantized LONG overflows int64 for small weights — review
     find), (priority DESC, doc_id ASC) tie-break. The global top-k
@@ -6068,7 +6067,7 @@ def ir3_bm25f_anchor_topk(spark, sf_dir):
     deterministically from the documents corpus. Exactness: per-field
     normalized tf floor-quantized to LONG 1e-6 units (cross-field sum
     integral under any partitioning, ONE de-scaling division), then the
-    ir1 oracle recipe (CPython-log Robertson idf over any-field df,
+    ir1 oracle recipe (libm-log Robertson idf over any-field df,
     round-6 DECIMAL contribution sums)."""
     from capelinker_spark.operators.ir import bm25f_topk
 

@@ -10,9 +10,8 @@ contract against the plain-Python reference chain
 (``capelinker_spark.ref_extract``) is enforced by tests/test_extract.py.
 
 The optional ``spousenamedist`` column (jw(mlast, wlast, p=0.1) within one
-record, data_raw/traindata_graafreinet.R:106) is the single Arrow-UDF column;
-it is computed on DISTINCT (mlast, wlast) pairs and joined back, the
-dedup-before-expensive-op rule the reference itself applies (R/util.R:146-148).
+record, data_raw/traindata_graafreinet.R:106) is the single Arrow-UDF column,
+computed per row by the C Jaro-Winkler kernel.
 """
 
 from __future__ import annotations
@@ -90,15 +89,8 @@ def extract_records(pages: DataFrame, with_spousenamedist: bool = True) -> DataF
     )
 
     if with_spousenamedist:
-        # NO broadcast hint: distinct (mlast, wlast) cardinality is unbounded
-        # in the input (round-1 audit flagged the unconditional broadcast as
-        # an OOM risk at web scale) — let AQE pick broadcast vs shuffle join
-        # from the measured build-side size.
-        pairs = (
-            df.select("mlast", "wlast")
-            .distinct()
-            .withColumn("spousenamedist", jw_udf(F.col("mlast"), F.col("wlast")))
-        )
-        df = df.join(pairs, on=["mlast", "wlast"], how="left")
+        # per row: no join follows, so deduplicating (mlast, wlast) first
+        # would cost a shuffle and a join back to save C-kernel calls
+        df = df.withColumn("spousenamedist", jw_udf(F.col("mlast"), F.col("wlast")))
 
     return df

@@ -6,8 +6,8 @@ pure-Python kernels (``jaro_winkler_dist``, ``osa_dist``) define the exact
 semantics (unit-tested against stringdist's documented behaviour), and the
 Spark-facing surface is Arrow-vectorized UDFs — zero per-row Python UDFs,
 per the engine's north rule. The JW/OSA UDFs are ``arrow_udf``s that hand
-each batch's Arrow string buffers to the C kernels (``_native``); Smith-
-Waterman stays a pandas UDF over the Python kernel. Soundex distance and
+each batch's Arrow string buffers to the C kernels (``_native``); the Smith-
+Waterman one calls the Python kernel pair by pair. Soundex distance and
 the Gaussian kernel are pure native column expressions (JVM-side, whole-
 stage codegen).
 
@@ -29,11 +29,10 @@ Semantics locked to the reference:
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType
 
 from capelinker_spark.functions import _native
@@ -196,17 +195,6 @@ def sw_norm_sim(
     return sc / (match * m) if m else 0.0
 
 
-_sw_cache: dict = {}
-
-
-@pandas_udf(DoubleType())
-def sw_sim_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Normalized Smith-Waterman similarity (Arrow-batched, distinct
-    pairs computed once per batch — the ``_pairwise_unique``
-    discipline)."""
-    return _pairwise_unique(a, b, sw_norm_sim, _sw_cache)
-
-
 _SOUNDEX_MAP = {
     **{c: "1" for c in "BFPV"},
     **{c: "2" for c in "CGJKQSXZ"},
@@ -263,33 +251,9 @@ def gk_py(x1: float, x2: float, sigma: float = 1.0) -> float:
 # ---------------------------------------------------------------------------
 
 
-_CACHE_MAX = 1 << 20
-
-
-def _pairwise_unique(a: pd.Series, b: pd.Series, fn, cache: dict):
-    """Apply fn over the UNIQUE (a, b) pairs of the batch, then broadcast back.
-
-    Candidate-pair batches repeat the same name pairs heavily (frequent
-    surnames); the reference itself dedups before the expensive op
-    (``R/util.R:146-148``). This is the per-batch analog, plus a worker-
-    lifetime cache shared ACROSS batches (Python UDF workers are long-lived,
-    so frequent-surname pairs are computed once per executor). Only the
-    pure-Python kernels go through here: for the C kernels the dict
-    bookkeeping cost more per pair than scoring every pair."""
-    va = a.tolist()  # object series → str/None, no pandas machinery in the loop
-    vb = b.tolist()
-    todo = [k for k in dict.fromkeys(zip(va, vb)) if k not in cache]
-    if todo:
-        if len(cache) > _CACHE_MAX:
-            cache.clear()
-        for k in todo:
-            cache[k] = fn(k[0], k[1])
-    out = [cache[k] for k in zip(va, vb)]
-    return pd.Series(out, index=a.index, dtype="float64")
-
-
 def _python_batch(a: pa.Array, b: pa.Array, fn) -> pa.Array:
-    """``fn`` pair by pair: the fallback when the C kernels are unavailable."""
+    """``fn`` pair by pair: Smith-Waterman's path, and the JW/OSA fallback
+    when the C kernels are unavailable."""
     return pa.array(
         [fn(x, y) for x, y in zip(a.to_pylist(), b.to_pylist())], pa.float64()
     )
@@ -328,6 +292,12 @@ def osa_norm_udf(a: pa.Array, b: pa.Array) -> pa.Array:
     """Normalized OSA distance (1 - stringsim), the ``{v}dist_osa`` feature."""
     out = _native.osa_batch(a, b, normalize=True)
     return out if out is not None else _python_batch(a, b, osa_norm_dist)
+
+
+@arrow_udf(DoubleType())
+def sw_sim_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Normalized Smith-Waterman similarity (no C kernel: the Python one)."""
+    return _python_batch(a, b, sw_norm_sim)
 
 
 # ---------------------------------------------------------------------------

@@ -29,9 +29,10 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from capelinker_spark.functions import libm
 
 __all__ = [
     "comparison_patterns",
@@ -202,9 +203,8 @@ def term_frequency_weights(
     and exactly zero net effect on average.
 
     Exactness: S2, N, n_v are exact BIGINT aggregates; the ratio is ONE
-    IEEE division and the log₂ runs in CPython (math.log2 per distinct
-    value inside an Arrow batch — the engine-wide rule that
-    oracle-checked logs never go through JVM Math.log), rounded to 6.
+    IEEE division and the log₂ is :func:`capelinker_spark.functions.libm.log2`,
+    rounded to 6.
 
     Plan shape: one hash-aggregate over the records (value histogram),
     one 1-row total broadcast (lazy scalar, J4 discipline), and the
@@ -213,12 +213,6 @@ def term_frequency_weights(
     adjust pair scores; broadcast it when the vocabulary is small.
 
     Returns ``(value, n_value, tf_weight)`` for non-null values."""
-    from pyspark.sql.types import DoubleType
-
-    @F.pandas_udf(DoubleType())
-    def _log2(x: pd.Series) -> pd.Series:
-        return x.map(lambda v: math.log2(v) if v is not None else None)
-
     freq = (
         records.where(F.col(col).isNotNull())
         .groupBy(F.col(col).alias(out_value))
@@ -237,7 +231,7 @@ def term_frequency_weights(
         .withColumn(
             "tf_weight",
             F.round(
-                _log2(
+                libm.log2(
                     F.col("_S2").cast("double")
                     / (F.col("_N") * F.col("n_value")).cast("double")
                 ),

@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from capelinker_spark.functions import libm
 from capelinker_spark.functions.strdist import gk, make_jw_udf
 from capelinker_spark.operators import blocking as B
 
@@ -39,27 +39,6 @@ def _suffix(df: DataFrame, suffix: str, shared: set[str]) -> DataFrame:
     return df.select(
         *[F.col(c).alias(c + suffix if c in shared else c) for c in df.columns]
     )
-
-
-def _quantized_idf(idf_w: DataFrame, n_docs: int, scale: int) -> DataFrame:
-    """Integer-quantized idf weights: ``floor(log(N/df)·scale + 0.5)`` as LONG,
-    with the log computed in CPython (Arrow UDF over the small distinct-bigram
-    table) — the JVM's ``Math.log`` differs from libm by 1 ulp on ~3% of
-    inputs, which would break cross-engine bit-equality of the oracle rows."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _q(df_cnt: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                int(math.floor(math.log(n_docs / d) * scale + 0.5))
-                for d in df_cnt.tolist()
-            ],
-            index=df_cnt.index,
-            dtype="int64",
-        )
-
-    return idf_w.withColumn("_idfq", _q(F.col("_df")))
 
 
 def _bigram_pairs(
@@ -90,29 +69,25 @@ def _bigram_pairs(
         # idf over the union of both sides' distinct strings (jMatrix-aligned
         # axes analog, R/candidates.R:97-112); idf = ln(N / df_bigram)
         union = cf.select("_s", "_bg").union(ct.select("_s", "_bg")).distinct()
-        idf_w = union.groupBy("_bg").agg(F.count("*").alias("_df"))
+        # N enters LAZILY as a broadcast 1-row count_distinct frame (the
+        # oracle's scalar-subquery analog) — an eager .count() here would
+        # launch a full scan of both string sets at plan-CONSTRUCTION time,
+        # once per candidates() call (same fix as the ts9 lazy vocab,
+        # textstats.py:311-316).
+        n_docs_df = union.agg(F.countDistinct("_s").alias("_ndocs"))
+        ratio = F.col("_ndocs").cast("double") / F.col("_df")
         if idf_quant:
-            # the CPython-log quantizer needs N as a literal for its closure
-            # (and the ORACLE SQL mirror needs the same literal), so the
-            # quantized oracle tier keeps the eager count — production below
-            # does not pay it
-            n_docs = union.select("_s").distinct().count()
-            idf_w = _quantized_idf(idf_w, n_docs, idf_quant).select("_bg", "_idfq")
-            weight = F.col("_idfq")
+            # oracle tier: libm log, quantized to exact longs
+            idf_col = F.floor(libm.ln(ratio) * idf_quant + 0.5).cast("long")
         else:
-            # production tier: N enters LAZILY as a broadcast 1-row
-            # count_distinct frame (the oracle's scalar-subquery analog) —
-            # an eager .count() here would launch a full scan of both
-            # string sets at plan-CONSTRUCTION time, once per candidates()
-            # call (same fix as the ts9 lazy vocab, textstats.py:311-316).
-            # log((double N)/df) keeps the original expression shape, so
-            # the result is bit-identical to the eager-literal form.
-            n_docs_df = union.agg(F.countDistinct("_s").alias("_ndocs"))
-            idf_w = idf_w.crossJoin(F.broadcast(n_docs_df)).select(
-                "_bg",
-                F.log(F.col("_ndocs").cast("double") / F.col("_df")).alias("_idfq"),
-            )
-            weight = F.col("_idfq")
+            idf_col = F.log(ratio)
+        idf_w = (
+            union.groupBy("_bg")
+            .agg(F.count("*").alias("_df"))
+            .crossJoin(F.broadcast(n_docs_df))
+            .select("_bg", idf_col.alias("_idfq"))
+        )
+        weight = F.col("_idfq")
         cf = cf.join(F.broadcast(idf_w), "_bg").withColumn(
             "_cnt", F.col("_cnt") * weight
         )
@@ -209,14 +184,7 @@ def candidates(
     if blocktype == "soundex":
         lhs = f.withColumn("_k", F.soundex("_bvf"))
         rhs = t.withColumn("_k", F.soundex("_bvt"))
-        salt = _resolve_salt(salt, lhs, rhs)
-        if salt:
-            lhs = B.add_salt(lhs, "_idf", salt)
-            rhs = B.explode_salt(rhs, salt)
-            pairs = lhs.join(rhs, ["_k", "_salt"]).drop("_salt")
-        else:
-            pairs = lhs.join(rhs, "_k")
-        pairs = pairs.select(
+        pairs = _keyed_join(lhs, rhs, salt).select(
             "_idf", "_idt", F.lit(None).cast("double").alias("score")
         )
     elif blocktype == "string distance":
@@ -224,13 +192,7 @@ def candidates(
         if preblock == "first_letter":
             lhs = f.withColumn("_k", B.first_letter_key(F.col("_bvf")))
             rhs = t.withColumn("_k", B.first_letter_key(F.col("_bvt")))
-            salt = _resolve_salt(salt, lhs, rhs)
-            if salt:
-                lhs = B.add_salt(lhs, "_idf", salt)
-                rhs = B.explode_salt(rhs, salt)
-                joined = lhs.join(rhs, ["_k", "_salt"])
-            else:
-                joined = lhs.join(rhs, "_k")
+            joined = _keyed_join(lhs, rhs, salt)
         elif preblock is None:
             joined = f.crossJoin(t)  # exact reference semantics; small inputs
         else:
@@ -278,12 +240,19 @@ def candidates(
     return _assemble(dat_from, dat_to, pairs, idf_, idt, keep_unmatched)
 
 
-def _resolve_salt(salt, lhs_keyed: DataFrame, rhs_keyed: DataFrame) -> int | None:
-    """salt="auto" → histogram-derived count (1 collapses to unsalted)."""
+def _keyed_join(lhs: DataFrame, rhs: DataFrame, salt) -> DataFrame:
+    """Equi-join on ``_k``, salted when ``salt`` asks for it: the left
+    side's rows spread over ``salt`` reducers by ``_idf``, the right side
+    replicated to every salt. ``salt="auto"`` derives the count from the
+    observed key histogram (1 collapses to unsalted)."""
     if salt == "auto":
-        n = B.auto_salt_count(lhs_keyed, rhs_keyed)
-        return n if n > 1 else None
-    return salt
+        salt = B.auto_salt_count(lhs, rhs)
+        salt = salt if salt > 1 else None
+    if not salt:
+        return lhs.join(rhs, "_k")
+    lhs = B.add_salt(lhs, "_idf", salt)
+    rhs = B.explode_salt(rhs, salt)
+    return lhs.join(rhs, ["_k", "_salt"]).drop("_salt")
 
 
 def candidates_multikey(
@@ -319,13 +288,7 @@ def candidates_multikey(
         rhs = dat_to.select(
             F.col(idvariable_to).alias("_idt"), key_fn(dat_to).alias("_k")
         ).where(F.col("_k").isNotNull())
-        key_salt = _resolve_salt(salt, lhs, rhs)
-        if key_salt:
-            lhs = B.add_salt(lhs, "_idf", key_salt)
-            rhs = B.explode_salt(rhs, key_salt)
-            pair_sets.append(lhs.join(rhs, ["_k", "_salt"]).select("_idf", "_idt"))
-        else:
-            pair_sets.append(lhs.join(rhs, "_k").select("_idf", "_idt"))
+        pair_sets.append(_keyed_join(lhs, rhs, salt).select("_idf", "_idt"))
     pairs = pair_sets[0]
     for p in pair_sets[1:]:
         pairs = pairs.union(p)

@@ -19,19 +19,19 @@ At 100 TB the postings + df tables are the thing you persist (partition
 by term bucket); this module recomputes them inline because the engine's
 checkpoint story lives in ``StageRunner``, not in each operator.
 
-Exactness tiers (the j4 idf convention, ``candidates.py:44-62``): the
-production path computes idf with JVM ``F.log`` (fast, 1-ulp-off libm on
-~3% of inputs); the oracle tier quantizes idf to LONGs with a CPython
-log (bit-identical to DuckDB's libm ``ln``) and accumulates per-term
-contributions as DECIMAL(38,6) so the sum is order-independent under any
-partitioning.
+Exactness tiers (the j4 idf convention): the production path computes
+idf with JVM ``F.log``; the oracle tier quantizes idf to LONGs with the
+libm log of ``functions/libm.py`` (bit-identical to DuckDB's ``ln``) and
+accumulates per-term contributions as DECIMAL(38,6) so the sum is
+order-independent under any partitioning.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from capelinker_spark.functions import libm
 
 TOKEN_PATTERN = "[a-z0-9]+"
 
@@ -61,26 +61,12 @@ def postings(
 
 def _idf_quantized(df_table: DataFrame, scale: int) -> DataFrame:
     """Robertson idf ``ln((N - df + 0.5)/(df + 0.5) + 1)`` quantized to
-    ``floor(idf*scale + 0.5)`` LONGs, the log in CPython (Arrow UDF over
-    the small distinct-term table — JVM ``Math.log`` is 1 ulp off libm on
-    ~3% of inputs, which a floor boundary can amplify; DuckDB's ``ln`` IS
-    libm). ``_n`` (corpus size) must already ride the table."""
-    import math
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _q(df_: pd.Series, n: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                int(math.floor(
-                    math.log((nn - d + 0.5) / (d + 0.5) + 1.0) * scale + 0.5
-                ))
-                for d, nn in zip(df_, n)
-            ]
-        )
-
-    return df_table.withColumn("_idfq", _q(F.col("_df"), F.col("_n")))
+    ``floor(idf*scale + 0.5)`` LONGs, the log taken by
+    :mod:`capelinker_spark.functions.libm` (a floor boundary would amplify
+    a 1-ulp JVM log). ``_n`` (corpus size) must already ride the table."""
+    n, d = F.col("_n"), F.col("_df")
+    idf = libm.ln((n - d + 0.5) / (d + 0.5) + 1.0)
+    return df_table.withColumn("_idfq", F.floor(idf * scale + 0.5).cast("long"))
 
 
 def bm25_topk(
@@ -105,7 +91,7 @@ def bm25_topk(
 
     ``idf_quant=None`` is the production path (JVM log, plain double
     sum). An integer ``idf_quant`` (e.g. 1_000_000) selects the
-    oracle-exact tier: CPython-log idf quantized to longs, each term
+    oracle-exact tier: libm-log idf quantized to longs, each term
     contribution rounded to 6 decimals and accumulated as DECIMAL(38,6)
     — bit-identical to the DuckDB mirror under any partitioning.
 
@@ -130,7 +116,7 @@ def bm25_topk(
     q_terms = query_terms.select(F.col(term_col).alias("term")).distinct()
     # df from UNIQUE (doc, term) postings rows, restricted to the QUERY
     # terms — only those idf values are ever joined into `matched`, so
-    # the per-term aggregation (and the CPython idf quantizer below)
+    # the per-term aggregation (and the libm idf quantizer below)
     # runs over the query vocabulary instead of the corpus vocabulary;
     # _n rides via the 1-row stats frame, no driver collect
     dfreq = (
@@ -284,7 +270,7 @@ def bm25f_topk(
     Exactness: per-field ``tf~`` is ONE deterministic IEEE chain floor-
     quantized to ``tf_quant`` LONG units; the cross-field sum is a LONG
     sum (order-independent for any number of fields); ``T`` is ONE
-    de-scaling division. ``idf_quant`` selects the oracle tier (CPython
+    de-scaling division. ``idf_quant`` selects the oracle tier (libm
     log, round-6 DECIMAL(38,6) contribution sums — the ir1 recipe);
     None is the production tier (JVM log, plain double sum).
 
@@ -338,7 +324,7 @@ def bm25f_topk(
         F.count_distinct(id_col).cast("long").alias("_n")
     )
     # df restricted to the QUERY terms (only those idf values join into
-    # `matched`) — the per-term aggregation and the CPython quantizer
+    # `matched`) — the per-term aggregation and the libm quantizer
     # run over the query vocabulary, not the corpus vocabulary
     qt = query_terms.select(F.col(term_col).alias("term")).distinct()
     dfreq = (

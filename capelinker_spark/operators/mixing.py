@@ -21,9 +21,10 @@ no driver work — the rule rides inside the scan's codegen stage.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from capelinker_spark.functions import libm
 
 _HEX_DIGITS = 5  # md5 prefix length: rate granularity 1/16^5
 
@@ -297,8 +298,8 @@ def weighted_sample_topk(
 
     * ``method='md5'`` — the cross-engine oracle tier: u = (h+1)/2^40
       from a 10-hex md5 digest (the division is by a POWER OF TWO, so u
-      is IEEE-exact), the log runs in CPython via one Arrow-batched UDF
-      (libm — bit-identical to DuckDB's ``ln``; the ir1 idf precedent).
+      is IEEE-exact), the log is :func:`capelinker_spark.functions.libm.ln`
+      (bit-identical to DuckDB's ``ln``; the ir1 idf precedent).
       The priority ``ln(u)/w`` stays a FULL-PRECISION DOUBLE — a
       quantized-LONG form overflows int64 for small weights (w ≲ 1e-13,
       routine for normalized importance scores) and a saturating clamp
@@ -312,10 +313,6 @@ def weighted_sample_topk(
     single-partition exchange — per-partition heaps then a k-row
     merge); ``group_col`` switches to a per-group row_number window
     (stratified selection), one hash exchange on the group key."""
-    import math
-
-    from pyspark.sql.functions import pandas_udf
-
     w = F.col(weight_col).cast("double")
     base = df.where(w.isNotNull() & (w > 0))
     key = F.coalesce(F.col(key_col).cast("string"), F.lit(""))
@@ -323,17 +320,7 @@ def weighted_sample_topk(
         h = F.conv(
             F.substring(F.md5(F.concat(F.lit(seed), key)), 1, 10), 16, 10
         ).cast("long")
-
-        @pandas_udf("double")
-        def _prio(hh: pd.Series, ww: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    math.log((int(x) + 1) / 1099511627776.0) / y
-                    for x, y in zip(hh, ww)
-                ]
-            )
-
-        kq = _prio(h, w)
+        log = libm.ln
     elif method == "xxhash64":
         # a STABLE integer from the seed string — Python's hash() is
         # salted per process (PYTHONHASHSEED) and would break the
@@ -345,10 +332,11 @@ def weighted_sample_topk(
             F.xxhash64(key, F.lit(seed_int)),
             F.lit(1 << 40),
         )
-        u = (h + 1).cast("double") / F.lit(float(1 << 40))
-        kq = F.log(u) / w
+        log = F.log
     else:
         raise ValueError(f"unknown method {method!r}")
+    u = (h + 1).cast("double") / F.lit(float(1 << 40))
+    kq = log(u) / w
 
     scored = base.withColumn("_prio", kq)
     if group_col is None:

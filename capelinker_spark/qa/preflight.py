@@ -9,9 +9,10 @@ per-column scans — plus a separate exploded-character pass for the char set.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from capelinker_spark.functions import libm
 
 EXPECTED_CLASSES = {
     # R/prep.R:102-112
@@ -214,19 +215,16 @@ def psi_drift(
     of exact integers.  Rule of thumb: PSI < 0.1 stable, 0.1–0.25
     drifting, > 0.25 shifted.
 
-    Exactness: the per-bucket term is computed in CPython (libm ln —
-    bit-identical to DuckDB's ``ln``; the ir1/fs2 bounded-Arrow
-    precedent) from the four integers (c_base, N_base, c_cur, N_cur) —
-    the distributed work is TWO map-side-combinable hash aggs over ≤
-    n_buckets+1 rows each; the Arrow UDF sees only the bucket table.
+    Exactness: the per-bucket term is IEEE arithmetic on the four
+    integers (c_base, N_base, c_cur, N_cur) around one
+    :func:`capelinker_spark.functions.libm.ln` (bit-identical to DuckDB's
+    ``ln``) — the distributed work is TWO map-side-combinable hash aggs
+    over ≤ n_buckets+1 rows each; the Arrow UDF sees only the bucket
+    table.
 
     Returns one row per bucket (bucket, c_base, c_cur, psi_term) plus
     the caller sums psi_term for the headline (kept per-bucket so the
     drift LOCATION is visible, not just the scalar)."""
-    import math
-
-    from pyspark.sql.functions import pandas_udf
-
     def bucketize(df: DataFrame) -> DataFrame:
         v = F.col(value_col)
         b = F.when(v.isNull(), F.lit(-1)).otherwise(
@@ -255,25 +253,9 @@ def psi_drift(
     )
     j = j.crossJoin(F.broadcast(tot))
 
-    @pandas_udf("double")
-    def _term(
-        c1: pd.Series, n1: pd.Series, c2: pd.Series, n2: pd.Series,
-        bb: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for a, na, b_, nb_, k in zip(c1, n1, c2, n2, bb):
-            p = (int(a) + 1) / (int(na) + int(k))
-            q = (int(b_) + 1) / (int(nb_) + int(k))
-            out.append((p - q) * math.log(p / q))
-        return pd.Series(out)
-
+    p = (F.col("c_base") + 1) / (F.col("_nb") + F.col("_b"))
+    q = (F.col("c_cur") + 1) / (F.col("_nc") + F.col("_b"))
     return j.select(
         "bucket", "c_base", "c_cur",
-        F.round(
-            _term(
-                F.col("c_base"), F.col("_nb"), F.col("c_cur"),
-                F.col("_nc"), F.col("_b"),
-            ),
-            9,
-        ).alias("psi_term"),
+        F.round((p - q) * libm.ln(p / q), 9).alias("psi_term"),
     )

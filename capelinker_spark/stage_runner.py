@@ -126,8 +126,10 @@ class StageRunner:
         df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
         m = obs.get
         n = m["n"]
-        # re-read: truncates lineage, supplies the manifest schema
-        out = self.spark.read.parquet(path)
+        # re-read: truncates lineage, supplies the manifest schema; given
+        # the frame's schema it runs no schema-inference job (_done's
+        # inferred read is the check against the files)
+        out = self.spark.read.schema(df.schema).parquet(path)
         with open(self._manifest_path(stage), "w") as fh:
             json.dump(
                 {

@@ -172,6 +172,24 @@ def test_observed_counts_match_the_checkpoints(spark, workdir, result):
         ), stage
 
 
+def test_manifest_schema_equals_inferred_read(spark, workdir, result):
+    """The manifest schema (taken from the stage re-read, which is given
+    the frame's schema) equals a fresh schema-inferring read of the
+    stage's parquet, for every stage — the comparison ``_done`` makes."""
+    import json
+    import os
+
+    stages = [d for d in sorted(os.listdir(workdir))
+              if os.path.exists(f"{workdir}/{d}/_manifest.json")]
+    assert {"records", "candidates", "features", "scores", "links",
+            "clusters"} <= set(stages)
+    for stage in stages:
+        with open(f"{workdir}/{stage}/_manifest.json") as fh:
+            m = json.load(fh)
+        fresh = spark.read.parquet(f"{workdir}/{stage}").schema.jsonValue()
+        assert m["schema"] == fresh, stage
+
+
 def test_kill_and_resume(spark, pages, truth, workdir, result):
     """Simulate a mid-run failure: delete the outputs of the last three
     stages, rerun with resume=True — identical final clusters, and the
